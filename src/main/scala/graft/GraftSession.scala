@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   *   cluster scale this would instead be sized to data volume / AQE target.
   * - AQE on: runtime coalescing + skew-join splitting are the 100 TB story
   *   for the skewed shuffles this engine can produce.
+  * - `nanosAsLong`: INT64 TIMESTAMP(NANOS) event files read as a long, which
+  *   `Bars.readEvents` and `Streams.eventsSchemaOf` truncate to µs.
+  * - RocksDB state store: `transformWithState` (`Streams.pipelineDedupRsi`)
+  *   runs on no other provider, and state stays off the heap.
+  * - `file://` through [[graft.source.LocalFs]]: no shell process per
+  *   created file, mkdir or rename.
   */
 object GraftSession {
 
@@ -40,7 +46,13 @@ object GraftSession {
       // resolution budget is a LIMIT, not a cost — normal plans still fix-
       // point early, only the deep chains need the headroom.
       .config("spark.sql.analyzer.maxIterations", "1000")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.source.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.source.LocalFs.Context].getName)
     master.fold(b)(m => b.master(m))
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder("graft-verify", Some(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Non-ANSI: div-by-zero → null, matching both Polars and DuckDB.
-      .config("spark.sql.ansi.enabled", "false")
-      // Window buffers stay on-heap (default spills to an external sorter
-      // after 4096 rows/partition; our per-symbol windows are far larger).
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "2097152")
-      // µs parquet timestamps: bit-stable vs DuckDB's TIMESTAMP.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -31,7 +31,8 @@ object Bars {
     *
     * Driver-generated parquet has shipped `ts` in two physical forms across
     * regenerations: INT64 TIMESTAMP(NANOS) (arrives as a long of nanoseconds
-    * under `spark.sql.legacy.parquet.nanosAsLong`, truncated to µs here —
+    * under `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession`
+    * sets, truncated to µs here —
     * the same truncation DuckDB applies) and TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) (arrives as TIMESTAMP_NTZ; cast to TimestampType
     * is an exact micros identity under the UTC session timezone, matching
@@ -41,7 +42,6 @@ object Bars {
     * ingest edge (reference: src/data/ingestion.py:63-104, 177-180).
     */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -23,15 +23,14 @@ object Streams {
     * files actually on disk at stream-build time. A file-stream source
     * cannot schema-dispatch per batch like Bars.readEvents, but the driver
     * has shipped `ts` in two physical forms across testdata regenerations
-    * (INT64 TIMESTAMP(NANOS) → LongType under nanosAsLong; TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) → TIMESTAMP_NTZ), so hardcoding either breaks
+    * (INT64 TIMESTAMP(NANOS) → LongType under `GraftSession`'s nanosAsLong;
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ), so hardcoding either breaks
     * silently at the next regeneration. One batch footer read resolves the
     * observed form; [[readEventStreamFrom]] then applies the matching
     * normalization so every downstream window/watermark sees one canonical
     * session-zoned TimestampType — identical to the batch ingest. Any third
     * physical form fails fast here rather than mid-stream. */
   def eventsSchemaOf(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = spark.read.parquet(dir).schema
     s("ts").dataType match {
       case LongType | TimestampNTZType | TimestampType => s

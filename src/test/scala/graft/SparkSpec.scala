@@ -45,7 +45,6 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val s = GraftSession.builder("graft-test", Some("local[4]"))
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -858,59 +858,46 @@ class StreamingSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$in/$name")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "symbol STRING, event_id BIGINT, ts TIMESTAMP, close DOUBLE")
-    // transformWithState requires the RocksDB state store — set for this
-    // query, restore after (the rest of the suite keeps the default store)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(): Unit = {
-        val stream = spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(in)
-        Streams.sinkUpsert(Streams.pipelineDedupRsi(stream), table, ckpt,
-          Seq("symbol", "event_id"), "event_id").awaitTermination(180000)
-      }
-      write("b1", b1 ++ Seq(b1(4), b1(9)))
-      run()
-      // mid-stream restart: new file lands, the SAME checkpoint restores
-      // both the dedup digest state and the per-symbol RSI state
-      write("b2", b2 ++ Seq(b1(6), b1(11), b2.head))
-      run()
-      val got = spark.read.parquet(table)
-        .collect().map(r => ((r.getString(0), r.getLong(1)),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      // batch twin over the deduped union: the Ewma-window RSI pipeline
-      val all = (b1 ++ b2).toDF("symbol", "event_id", "ts", "close")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol").orderBy(col("ts"), col("event_id"))
-      val part = Seq(col("symbol")); val ord = Seq(col("ts"), col("event_id"))
-      val delta = col("close") - lag(col("close"), 1).over(w)
-      val s1 = all.select(col("symbol"), col("event_id"),
-        col("ts"), col("close"),
-        ((delta > 0).cast("double") * delta).as("_g"),
-        ((delta < 0).cast("double") * (-delta)).as("_l"))
-      def ewm(c: org.apache.spark.sql.Column) = graft.expr.Ewma.ewmaSpanOver(
-        c, graft.Params.RsiPeriod, adjust = false, part, ord)
-      val want = s1.select(col("symbol"), col("event_id"),
-          (lit(100) - lit(100) / (lit(1) + ewm(col("_g")) /
-            (ewm(col("_l")) + lit(1e-10)))).as("rsi"))
-        .collect().map(r => ((r.getString(0), r.getLong(1)),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      assert(got.keySet == want.keySet,
-        s"sunk key set diverges: extra=${got.keySet -- want.keySet} " +
-          s"missing=${want.keySet -- got.keySet}")
-      want.foreach { case (k, wv) =>
-        val gv = got(k)
-        assert(gv.isDefined == wv.isDefined, s"null mismatch at $k: $gv vs $wv")
-        gv.zip(wv).foreach { case (a, b) =>
-          assert(math.abs(a - b) < 1e-9, s"rsi mismatch at $k: $a vs $b") }
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    def run(): Unit = {
+      val stream = spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true").parquet(in)
+      Streams.sinkUpsert(Streams.pipelineDedupRsi(stream), table, ckpt,
+        Seq("symbol", "event_id"), "event_id").awaitTermination(180000)
+    }
+    write("b1", b1 ++ Seq(b1(4), b1(9)))
+    run()
+    // mid-stream restart: new file lands, the SAME checkpoint restores
+    // both the dedup digest state and the per-symbol RSI state
+    write("b2", b2 ++ Seq(b1(6), b1(11), b2.head))
+    run()
+    val got = spark.read.parquet(table)
+      .collect().map(r => ((r.getString(0), r.getLong(1)),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+    // batch twin over the deduped union: the Ewma-window RSI pipeline
+    val all = (b1 ++ b2).toDF("symbol", "event_id", "ts", "close")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("symbol").orderBy(col("ts"), col("event_id"))
+    val part = Seq(col("symbol")); val ord = Seq(col("ts"), col("event_id"))
+    val delta = col("close") - lag(col("close"), 1).over(w)
+    val s1 = all.select(col("symbol"), col("event_id"),
+      col("ts"), col("close"),
+      ((delta > 0).cast("double") * delta).as("_g"),
+      ((delta < 0).cast("double") * (-delta)).as("_l"))
+    def ewm(c: org.apache.spark.sql.Column) = graft.expr.Ewma.ewmaSpanOver(
+      c, graft.Params.RsiPeriod, adjust = false, part, ord)
+    val want = s1.select(col("symbol"), col("event_id"),
+        (lit(100) - lit(100) / (lit(1) + ewm(col("_g")) /
+          (ewm(col("_l")) + lit(1e-10)))).as("rsi"))
+      .collect().map(r => ((r.getString(0), r.getLong(1)),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+    assert(got.keySet == want.keySet,
+      s"sunk key set diverges: extra=${got.keySet -- want.keySet} " +
+        s"missing=${want.keySet -- got.keySet}")
+    want.foreach { case (k, wv) =>
+      val gv = got(k)
+      assert(gv.isDefined == wv.isDefined, s"null mismatch at $k: $gv vs $wv")
+      gv.zip(wv).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-9, s"rsi mismatch at $k: $a vs $b") }
     }
   }
 }
