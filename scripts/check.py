@@ -16,7 +16,7 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 if "--no-run" not in flags:
     r = subprocess.run(
         ["sbt", "-client", f'runMain graft.Verify {sfdir} {outdir}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), capture_output=True, text=True)
     for line in r.stdout.splitlines():
         if "[verify]" in line or "Exception" in line:
             print(line)

@@ -5,7 +5,7 @@
 # the tail), and the smoke step asserts Smoke's terminal success marker,
 # not a nonzero line count a partial run could satisfy.
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch test 2>&1 | tail -3
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -1
 python3 scripts/check.py /root/testdata/sf0.001 /tmp/gate_sf0001 | tail -1

@@ -209,10 +209,11 @@ object Bench {
     // per-query sample arrays — persist the full blob so round-over-round
     // regressions can be diffed without a re-run (see BENCH.md). Full
     // sweeps only: a dev-filtered run must not clobber the last full
-    // sweep's record.
+    // sweep's record. Written to the working directory, which sbt's forked
+    // `run` sets to the repository root.
     if (headline)
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/bench_out.json"),
+        java.nio.file.Paths.get("bench_out.json"),
         (json + "\n").getBytes("UTF-8"))
     spark.stop()
   }

@@ -18,6 +18,12 @@ import org.apache.spark.sql.SparkSession
   *   runs on no other provider, and state stays off the heap.
   * - `file://` through [[graft.source.LocalFs]]: no shell process per
   *   created file, mkdir or rename.
+  * - `hugeMethodLimit=8000`, HotSpot's huge-method limit (the value Spark's
+  *   documentation gives): a whole-stage subtree whose largest generated
+  *   method is over it runs as per-operator compiled projections instead.
+  *   At Spark's default (65535) such a method is kept and the JIT never
+  *   compiles it; the feature pipeline's 8,011-byte projection under
+  *   `Targets.withTarget` ran interpreted. `CodegenSpec` guards it.
   */
 object GraftSession {
 
@@ -46,6 +52,7 @@ object GraftSession {
       // resolution budget is a LIMIT, not a cost — normal plans still fix-
       // point early, only the deep chains need the headroom.
       .config("spark.sql.analyzer.maxIterations", "1000")
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

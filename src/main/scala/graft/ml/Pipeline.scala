@@ -2,11 +2,12 @@ package graft.ml
 
 import graft.Params
 import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier}
-import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator, RegressionEvaluator}
+import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, RegressionEvaluator}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** ML surface (SURVEY.md §2.7): feature-matrix prep, temporal split,
   * gradient-boosted-tree train/score/evaluate, feature importances.
@@ -81,17 +82,38 @@ object MlPipeline {
     * precision/recall/F1 are POSITIVE-CLASS (label 1.0) numbers — the
     * published 0.5161/0.8421/0.6400 are TP/(TP+FP), TP/(TP+FN) and their
     * harmonic mean for the up-move class, not weighted multiclass averages
-    * (VERDICT r13 #3). */
+    * (VERDICT r13 #3).
+    *
+    * One pass instead of five evaluators: the three columns the metrics read
+    * are cached once, so the split, assembly and model transform behind
+    * `scored` run once. Accuracy, precision, recall and F1 come from one
+    * confusion-count aggregate, in the same double operations as MLlib's
+    * `MulticlassMetrics` (precision 0.0 when nothing is predicted positive,
+    * F1 0.0 when precision + recall is 0), so they equal
+    * `MulticlassClassificationEvaluator`'s values bit for bit; AUC is
+    * MLlib's `BinaryClassificationEvaluator` over the cached columns. With
+    * no positive label, recall and F1 are NaN where MLlib throws. */
   def evaluateClassifier(scored: DataFrame): Map[String, Double] = {
-    def m(metric: String) = new MulticlassClassificationEvaluator()
-      .setMetricName(metric).setMetricLabel(1.0).evaluate(scored)
-    Map(
-      "accuracy" -> m("accuracy"),
-      "precision" -> m("precisionByLabel"),
-      "recall" -> m("recallByLabel"),
-      "f1" -> m("fMeasureByLabel"),
-      "roc_auc" -> new BinaryClassificationEvaluator()
-        .setMetricName("areaUnderROC").evaluate(scored))
+    val cached = scored.select("label", "prediction", "rawPrediction")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (label, pred) = (col("label"), col("prediction"))
+      val c = cached.agg(count(lit(1)), count_if(label === pred),
+        count_if(label === 1.0 && pred === 1.0), count_if(pred === 1.0),
+        count_if(label === 1.0)).head()
+      val Seq(n, correct, tp, predPos, labelPos) = (0 until 5).map(c.getLong(_).toDouble)
+      val precision = if (predPos == 0) 0.0 else tp / predPos
+      val recall = tp / labelPos
+      val f1 = if (precision + recall == 0) 0.0
+        else 2.0 * precision * recall / (precision + recall)
+      Map(
+        "accuracy" -> correct / n,
+        "precision" -> precision,
+        "recall" -> recall,
+        "f1" -> f1,
+        "roc_auc" -> new BinaryClassificationEvaluator()
+          .setMetricName("areaUnderROC").evaluate(cached))
+    } finally cached.unpersist()
   }
 
   /** Regression metrics (reference src/ml/evaluation.py:62-82). */

@@ -77,10 +77,16 @@ object Bars {
     // here (to defeat AQE's byte-coalescing of this narrow exchange, which
     // runs the downstream 49-feature pipeline on ~2 partitions) was TRIED
     // and reverted: the pin's wall dropped only 0.94 → 0.72 s while total
-    // task time rose 1.8 → 11.9 s (fixed per-task window-operator setup
-    // dominates 3k-row partitions at 32 symbols), and ml_feature_bins got
-    // slower end-to-end. At real scale rows-per-symbol grow and AQE sizes
-    // the exchange correctly on its own.
+    // task time rose 1.8 → 11.9 s, and ml_feature_bins got slower
+    // end-to-end. That rise was put down to per-task window-operator setup
+    // without a profile. A JFR profile of one 100k-row feature build (one
+    // task) later showed no setup cost of note: 31.5% of its executor
+    // samples were in an interpreted whole-stage method (the projection
+    // under Targets.withTarget's lead window, 8,011 bytes, over HotSpot's
+    // 8,000-byte compile limit) and 16.7% in parquet dictionaries built
+    // for double columns and then dropped. GraftSession's hugeMethodLimit and
+    // Storage.save's plain-encoded doubles remove both; the repartition has
+    // to be measured again on top of them, at 4 and 32 cores.
     events
       .withColumn("symbol", sym)
       .withColumn("datetime", col("ts"))

@@ -2,7 +2,7 @@ package graft.source
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Storage utilities mirroring the reference's save/load + cache layer
@@ -22,7 +22,7 @@ object Storage {
     s"$baseDir/processed/$name.$format"
 
   def save(df: DataFrame, path: String, format: String = "parquet"): Unit = format match {
-    case "parquet" => df.write.mode("overwrite").parquet(path)
+    case "parquet" => df.write.mode("overwrite").options(plainFloats(df)).parquet(path)
     case "csv" => df.write.mode("overwrite").option("header", "true")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS").csv(path)
     case "json" => df.write.mode("overwrite")
@@ -30,6 +30,19 @@ object Storage {
     case "orc" => df.write.mode("overwrite").orc(path)
     case other => throw new IllegalArgumentException(s"Unsupported format: $other")
   }
+
+  /** Parquet writer options that turn dictionary encoding off for each
+    * top-level floating-point column (parquet-mr's per-column key
+    * `parquet.enable.dictionary#<column>`). Prices, returns and every derived
+    * feature are near-unique doubles: the writer built a dictionary for each
+    * such column, found it too large at the end of the page and fell back to
+    * plain encoding, so the dictionary was paid for and thrown away. String
+    * and integral columns, whose values repeat, keep their dictionaries. */
+  private def plainFloats(df: DataFrame): Map[String, String] =
+    df.schema.fields.collect {
+      case f if f.dataType == DoubleType || f.dataType == FloatType =>
+        s"parquet.enable.dictionary#${f.name}" -> "false"
+    }.toMap
 
   def load(spark: SparkSession, path: String, format: String = "parquet",
       schema: Option[StructType] = None): DataFrame = format match {

@@ -6,6 +6,9 @@ package graft
   * centroid-table by construction (O(1)/O(k) rows — documented in each
   * query's scaladoc). A new query that accidentally plans a cartesian or
   * an unkeyed join fails here before any benchmark or scale run sees it.
+  * The same loop compiles every whole-stage subtree and fails if one has a
+  * method over HotSpot's 8000-byte limit while the session's
+  * `hugeMethodLimit` would keep it (it would then run interpreted).
   */
 class AllPlansSpec extends SparkSpec {
 
@@ -82,10 +85,15 @@ class AllPlansSpec extends SparkSpec {
   test("no registered query plans a CartesianProduct; BNLJ only on scalar-side allowlist") {
     val offenders = scala.collection.mutable.ListBuffer[String]()
     val bnlSeen = scala.collection.mutable.Set[String]()
+    val hugeStages = scala.collection.mutable.ListBuffer[String]()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val plan =
-        try fn(spark, dir).queryExecution.executedPlan.toString
+      val executed =
+        try fn(spark, dir).queryExecution.executedPlan
         catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
+      val plan = executed.toString
+      // whole-stage methods HotSpot would refuse to JIT-compile
+      val huge = CodegenSpec.maxMethodSizes(executed).filter(_ > CodegenSpec.HotSpotLimit)
+      if (huge.nonEmpty) hugeStages += s"$name (${huge.sorted.mkString(", ")} bytes)"
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin")) {
@@ -102,6 +110,11 @@ class AllPlansSpec extends SparkSpec {
         offenders += s"$name: $shuffles shuffle Exchanges (> 18 ceiling)"
     }
     assert(offenders.isEmpty, s"plan guard violations:\n  ${offenders.mkString("\n  ")}")
+    info(s"${hugeStages.size} queries with a whole-stage method over " +
+      s"${CodegenSpec.HotSpotLimit} bytes: ${hugeStages.mkString("; ")}")
+    assert(hugeStages.isEmpty || CodegenSpec.sessionLimit(spark) <= CodegenSpec.HotSpotLimit,
+      s"hugeMethodLimit ${CodegenSpec.sessionLimit(spark)} lets these run interpreted: " +
+        hugeStages.mkString("; "))
     // the allowlist must stay exact — a stale entry would mask a future
     // regression on that query
     val stale = bnlAllowed -- bnlSeen

@@ -110,6 +110,33 @@ class MlSpec extends SparkSpec {
     assert(math.abs(m("f1") - f1) < 1e-12, s"f1=${m("f1")} want $f1")
   }
 
+  test("one-pass evaluateClassifier equals MLlib's five evaluators, with and without positive predictions") {
+    import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
+    def mllib(scored: org.apache.spark.sql.DataFrame): Map[String, Double] = {
+      def m(metric: String) = new MulticlassClassificationEvaluator()
+        .setMetricName(metric).setMetricLabel(1.0).evaluate(scored)
+      Map("accuracy" -> m("accuracy"), "precision" -> m("precisionByLabel"),
+        "recall" -> m("recallByLabel"), "f1" -> m("fMeasureByLabel"),
+        "roc_auc" -> new BinaryClassificationEvaluator()
+          .setMetricName("areaUnderROC").evaluate(scored))
+    }
+    val feats = graft.features.Targets.withTarget(
+      graft.features.Features.computeAllFeatures(graft.source.Bars.bars(spark, dir)))
+    val (train, test) = MlPipeline.temporalSplit(feats)
+    val fcols = graft.features.Features.FeatureCols
+    val model = MlPipeline.classifier(maxIter = 3).fit(MlPipeline.assemble(train, fcols))
+    val scored = model.transform(MlPipeline.assemble(test, fcols))
+    val noPositive = scored.withColumn("prediction", lit(0.0))
+    for ((what, frame) <- Seq("trained fold" -> scored, "no positive prediction" -> noPositive)) {
+      val (got, want) = (MlPipeline.evaluateClassifier(frame), mllib(frame))
+      assert(got.keySet == want.keySet, what)
+      for (k <- want.keys)
+        assert(math.abs(got(k) - want(k)) <= 1e-12, s"$what $k: ${got(k)} vs MLlib ${want(k)}")
+    }
+    val none = MlPipeline.evaluateClassifier(noPositive)
+    assert(none("precision") == 0.0 && none("recall") == 0.0 && none("f1") == 0.0)
+  }
+
   test("topk_importance is training-deterministic: two trainings, identical top-20") {
     // the registry's single rows-only entry: GBT importances are not
     // ORACLE-reproducible (no cross-engine tree twin), but with the seed

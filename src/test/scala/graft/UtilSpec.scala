@@ -28,6 +28,51 @@ class UtilSpec extends SparkSpec {
     }
   }
 
+  test("parquet save: floating-point columns skip the dictionary, others keep it, values bit-exact") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    // few distinct values per column, so every column would take a
+    // dictionary if the writer were left to choose
+    val ds = Seq(1.5, Double.NaN, -0.0, 0.0, Double.NegativeInfinity, 3.0e300)
+    val schema = StructType(Seq(StructField("id", LongType, false),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("s", StringType), StructField("n", LongType)))
+    val rows = (0 until 3000).map { i =>
+      val nul = i % 13 == 5
+      Row(i.toLong, if (nul) null else ds(i % ds.size),
+        if (nul) null else ds(i % ds.size).toFloat,
+        if (nul) null else s"s${i % 5}", if (nul) null else (i % 11).toLong)
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val path = java.nio.file.Files.createTempDirectory("graft-dict").toString + "/t"
+    Storage.save(df, path)
+
+    val files = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    val chunks = files.toSeq.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage).toSeq
+      finally r.close()
+    }
+    for (col <- Seq("d", "f"))
+      assert(chunks.filter(_._1 == col).forall(!_._2), s"$col chunk has a dictionary page: $chunks")
+    // (`id` is unique, so its own dictionary overflows; it is not checked)
+    for (col <- Seq("s", "n"))
+      assert(chunks.filter(_._1 == col).forall(_._2), s"$col chunk lost its dictionary: $chunks")
+    assert(chunks.map(_._1).toSet == Set("id", "d", "f", "s", "n"))
+
+    def bits(frame: org.apache.spark.sql.DataFrame) =
+      frame.orderBy("id").collect().toSeq.map(CodegenSpec.bits)
+    val back = Storage.load(spark, path)
+    assert(back.schema.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType))
+    assert(bits(back) == bits(df), "parquet round trip changed a value")
+  }
+
   test("latestCached resolves the newest matching file by mtime") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cache")
     def touch(name: String, t: Long) = {
