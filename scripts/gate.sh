@@ -2,8 +2,8 @@
 # Full pre-round gate: unit tests, oracle compare at two SFs, smoke, and
 # the partition-invariance replay. Every step's exit code is load-bearing
 # (pipefail — a failing suite or oracle compare fails the gate even through
-# the tail), and the smoke step asserts Smoke's terminal success marker,
-# not a nonzero line count a partial run could satisfy.
+# the tail), and the smoke step asserts `Dev smoke`'s terminal success
+# marker, not a nonzero line count a partial run could satisfy.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch test 2>&1 | tail -3
@@ -11,7 +11,7 @@ python3 scripts/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -1
 python3 scripts/check.py /root/testdata/sf0.001 /tmp/gate_sf0001 | tail -1
 SPARK_GRAFT_CPUS=7 sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_p7" >/dev/null 2>&1
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/gate_p7 --no-run | tail -1
-sbt -client "runMain graft.Smoke" 2>&1 | grep -F '[smoke] ALL OK'
+sbt -client "runMain graft.Dev smoke" 2>&1 | grep -F '[smoke] ALL OK'
 # Bench regression table (advisory): if a fresh sweep was taken into
 # bench_out_new.json, diff it against the committed previous-round
 # bench_out.json and flag >1.5x warm-time regressions. Skipped when no

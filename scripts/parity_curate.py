@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Merge SqlParityScan logs into the curated covered list.
+"""Merge `graft.Dev parity` logs into the curated covered list.
 
     python3 scripts/parity_curate.py LOG [LOG...] [--max-sec S]
 

@@ -205,16 +205,24 @@ object Bench {
       s""""samples":$samplesJson,""" + probeJson +
       headlineJson + s""""sf":"$sfDir"}"""
     println(json)
+    // A failed sample (-1) fails the sweep: `total` leaves it out, so a
+    // sweep that passed would report a broken query as a faster total.
+    val failed = results.collect { case (k, _, ss) if ss.exists(_ < 0) => k } ++
+      noiseProbe.filter(_.exists(_ < 0)).map(_ => "noise_probe")
     // The driver keeps only a short stdout tail, which truncates the
     // per-query sample arrays — persist the full blob so round-over-round
     // regressions can be diffed without a re-run (see BENCH.md). Full
-    // sweeps only: a dev-filtered run must not clobber the last full
-    // sweep's record. Written to the working directory, which sbt's forked
-    // `run` sets to the repository root.
-    if (headline)
+    // sweeps that ran clean only: a dev-filtered or failed run must not
+    // clobber the last good sweep's record. Written to the working
+    // directory, which sbt's forked `run` sets to the repository root.
+    if (headline && failed.isEmpty)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_out.json"),
         (json + "\n").getBytes("UTF-8"))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -27,9 +27,10 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
   def builder(appName: String = "graft", master: Option[String] = None): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val b = SparkSession.builder()
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -64,8 +65,6 @@ object GraftSession {
   }
 
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val s = builder(appName, Some(s"local[$cpus]")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -839,8 +839,8 @@ object Graph {
     // half-step (next half's score broadcast, both sides of the tol check,
     // the final hub⋈auth join), and EVERY consumer re-ran the aggregate
     // and built a fresh broadcast as nested sub-jobs (~3 extra jobs per
-    // consumption; ProfJobs r15 measured graph_hits at ~260 jobs, driver
-    // gaps 3.0 s of 9.7 s wall). The eager scalar is the same class of
+    // consumption; the r15 job timeline showed graph_hits at ~260 jobs,
+    // driver gaps 3.0 s of 9.7 s wall). The eager scalar is the same class of
     // 1-row action as the tol check, runs once per half-step over the
     // 2-block checkpoint, and makes the normalized frame free to consume
     // any number of times. Same sum, same division, bit-identical values
@@ -900,21 +900,10 @@ object Graph {
   /** The customer→part endorsement graph: a genuinely DIRECTED edge per
     * distinct (customer, part) purchase pair — parts never link out, so
     * every part node is dangling and the graph exercises the full
-    * generalized-PageRank surface (dst-only nodes + dangling mass). */
-  def customerPartEdges(s: SparkSession, dir: String): DataFrame = {
-    val o = graft.source.Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    graft.source.Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
-        concat(lit("p"), col("l_partkey").cast("string")).as("dst"))
-      .distinct()
-  }
-
-  /** [[customerPartEdges]] with LONG-PACKED node ids (customer k → 2k,
-    * part k → 2k+1) — see [[supplierPartEdgesPacked]] for the rationale
-    * and the float-drift argument. Decode with
+    * generalized-PageRank surface (dst-only nodes + dangling mass). Node
+    * ids are LONG-PACKED (customer k → 2k, part k → 2k+1) — see
+    * [[supplierPartEdgesPacked]] for the rationale and the float-drift
+    * argument. Decode to the public `c<k>`/`p<k>` ids with
     * `unpackNode(col, "c", "p")`. */
   def customerPartEdgesPacked(s: SparkSession, dir: String): DataFrame = {
     val o = graft.source.Tables.orders(s, dir)
@@ -932,21 +921,10 @@ object Graph {
   }
 
   /** The supplier↔part co-occurrence graph: one undirected (symmetrized)
-    * edge per distinct supplier–part pair observed in lineitem, node ids
-    * prefixed `s`/`p`. */
-  def supplierPartEdges(s: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.source.Tables.lineitem(s, dir)
-      .select(concat(lit("s"), col("l_suppkey").cast("string")).as("a"),
-        concat(lit("p"), col("l_partkey").cast("string")).as("b"))
-      .distinct()
-    pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-  }
-
-  /** [[supplierPartEdges]] with LONG-PACKED node ids: supplier k → 2k,
-    * part k → 2k+1 (bijective — the key domains are disjoint by the low
-    * bit). The iterative rounds then hash/compare/shuffle 8-byte longs
-    * instead of 5–8-byte strings (guide §2.3 narrower types: the round
+    * edge per distinct supplier–part pair observed in lineitem, with
+    * LONG-PACKED node ids: supplier k → 2k, part k → 2k+1 (bijective — the
+    * key domains are disjoint by the low bit). The iterative rounds then
+    * hash/compare/shuffle 8-byte longs instead of 5–8-byte strings (guide §2.3 narrower types: the round
     * job's broadcast probe + partial agg is the per-round cost on the
     * broadcast path, and long keys roughly halve its per-row work), and
     * the query decodes back to the public `s<k>`/`p<k>` ids at the
@@ -1088,7 +1066,7 @@ object Graph {
     val adj = if (bcast) broadcast(adjRaw) else adjRaw
     // Broadcast path: both attach joins ship the adjacency to the probe
     // side, so the intersect/explode stage — the plan's dominant CPU (r15
-    // ProfJobs: 16.8 s task time in 10 tasks of 3.85 s wall at 32 cores) —
+    // job timeline: 16.8 s task time in 10 tasks of 3.85 s wall at 32 cores) —
     // runs at the pinned blocks' count, which AQE sized by BYTES of the
     // 2-long rows, not by the Θ(Σ min-degree) work per row. One cheap
     // round-robin exchange of the narrow edge list fans it to the session

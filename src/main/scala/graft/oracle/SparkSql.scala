@@ -317,7 +317,7 @@ object SparkSql {
 
   /** The CANDIDATE Spark-dialect text for any registry query: the override
     * when one exists, else the dialect-bridged oracle text. Dev-scan use
-    * only (SqlParityScan probes candidates to grow [[covered]]) — the
+    * only (`graft.Dev parity` probes candidates to grow [[covered]]) — the
     * textual bridge rules are corpus-tuned and may mangle statements
     * outside the tested surface. */
   def candidate(name: String): Option[String] =
@@ -337,7 +337,7 @@ object SparkSql {
   /** The CERTIFIED SQL-parity surface: queries whose [[statement]] runs on
     * `spark.sql` and matches the registered DataFrame plan value-for-value
     * (SqlParitySpec enforces every entry on every test run; regenerate the
-    * list with the SqlParityScan dev tool after touching the bridge or an
+    * list with `graft.Dev parity` after touching the bridge or an
     * oracle statement). */
   val covered: Seq[String] = Seq(
     "agg_cube", "bars_imbalance", "corpus_curriculum",

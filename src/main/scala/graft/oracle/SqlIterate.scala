@@ -218,8 +218,10 @@ object SqlIterate {
     s"CAST($s AS DOUBLE)"
   }
 
-  /** The directed customer→part endorsement edge list
-    * ([[graft.analytics.Graph.customerPartEdges]]) as plain ANSI SQL. */
+  /** The directed customer→part endorsement edge list as plain ANSI SQL,
+    * with the string ids that
+    * [[graft.analytics.Graph.customerPartEdgesPacked]] plus
+    * [[graft.analytics.Graph.unpackNode]] produce. */
   private val customerPartEdgesSql: String =
     """SELECT DISTINCT concat('c', CAST(o.o_custkey AS STRING)) AS src,
       |       concat('p', CAST(l.l_partkey AS STRING)) AS dst

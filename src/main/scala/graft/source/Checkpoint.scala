@@ -80,14 +80,6 @@ object Checkpoint {
     def pinned(): Dataset[T] = pin(ds)
   }
 
-  /** Stride conf for [[Rounds]]: in durable (cluster) mode, one round in
-    * `stride` gets a reliable checkpoint; the rounds between persist only,
-    * so executor loss replays at most `stride-1` rounds of lineage from
-    * the last durable leaf instead of paying a durable write EVERY round
-    * (the measured r13 premium was 1.5–1.8× — almost all of it per-round
-    * checkpoint I/O). */
-  val StrideConf = "spark.graft.pinStride"
-
   /** Per-ROUND pin policy for iterative operators (PageRank/PPR/HITS
     * rounds, k-core h-index rounds, CC label rounds). LOCAL mode is
     * exactly [[pin]] — an eager local checkpoint per round, the shape
@@ -99,16 +91,17 @@ object Checkpoint {
     * more than the node-sized shuffle it saved, graph_hits 6.7→10.9 s.)
     *
     * DURABLE mode is where Rounds earns its keep: a reliable checkpoint
-    * every [[StrideConf]]-th round (default 3) and persist-only rounds
-    * between. The persisted rounds keep lineage back to the last durable
-    * leaf, so executor loss is still recoverable (recompute ≤ stride-1
-    * rounds) while the durable write volume drops stride×. [[seal]]
-    * closes the loop: the frame handed back to the caller is always a
-    * durable leaf in durable mode, and intermediate round caches are
-    * released. Results are bit-identical across policies (CheckpointSpec
-    * / CheckpointBench assert hash equality in-run). */
+    * every third round and persist-only rounds between. The persisted
+    * rounds keep lineage back to the last durable leaf, so executor loss
+    * replays at most two rounds instead of paying a durable write EVERY
+    * round (the measured r13 premium was 1.5–1.8× — almost all of it
+    * per-round checkpoint I/O), while the durable write volume drops 3×.
+    * [[seal]] closes the loop: the frame handed back to the caller is
+    * always a durable leaf in durable mode, and intermediate round caches
+    * are released. Results are bit-identical across policies (CheckpointSpec
+    * / `graft.Dev checkpoint` assert hash equality in-run). */
   final class Rounds(session: org.apache.spark.sql.SparkSession) {
-    private val stride = session.conf.get(StrideConf, "3").toInt
+    private val stride = 3
     private val mode = session.conf.get(ModeConf, "auto")
     private val durable = mode == "reliable" ||
       (mode == "auto" && session.sparkContext.getCheckpointDir.isDefined)

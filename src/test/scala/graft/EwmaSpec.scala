@@ -109,6 +109,23 @@ class EwmaSpec extends SparkSpec {
     assert(out.count() == close.length)
     val first = out.orderBy("y").limit(1).collect()(0).getDouble(0)
     assert(!first.isNaN)
+
+    // 4-argument form: ignoreNulls=false must reach the expression — over
+    // interior nulls it equals the DataFrame path with the same flag and
+    // differs from the default (weights frozen across nulls)
+    val gappy = barsOf(close).withColumn("close",
+      when(col("event_id") % 3 === 1, lit(null)).otherwise(col("close")))
+    gappy.createOrReplaceTempView("ewma_gappy")
+    val viaSql = column(spark.sql(
+      """SELECT symbol, event_id, ewma(close, 0.2, true, false)
+        |  OVER (PARTITION BY symbol ORDER BY datetime, event_id) AS y
+        |FROM ewma_gappy""".stripMargin), "y")
+    def viaDf(ignoreNulls: Boolean) = column(gappy.select(col("symbol"),
+      col("event_id"), Ewma.ewmaOver(col("close"), 0.2, adjust = true,
+        Seq(col("symbol")), Seq(col("datetime"), col("event_id")),
+        ignoreNulls = ignoreNulls).as("y")), "y")
+    assert(viaSql == viaDf(ignoreNulls = false))
+    assert(viaSql != viaDf(ignoreNulls = true))
   }
 
   test("ewma partitions independently per symbol") {
