@@ -17,11 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
 
     // Bench-only extras: tracked perf numbers for documented at-scale
     // variants that are deliberately NOT oracle-gated (the approx path
@@ -43,11 +39,14 @@ object Bench {
     val known = benchable.map(_._1).toSet
     require(args.forall(known), s"unknown query name(s): ${args.filterNot(known).mkString(", ")}")
 
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOne(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
-        System.err.println(s"[bench] query failed: ${e.getMessage}"); return -1.0
+        System.err.println(s"[bench] query failed: $name")
+        e.printStackTrace()
+        return -1.0
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -89,8 +88,8 @@ object Bench {
     val noiseProbe: Option[Seq[Double]] =
       if (!headline) None
       else SparkEntry.queries.get("ml_matrix").map { fn =>
-        runOne(fn) // untimed warmup
-        (1 to 3).map(_ => runOne(fn))
+        runOne("ml_matrix", fn) // untimed warmup
+        (1 to 3).map(_ => runOne("ml_matrix", fn))
       }
 
     // Headline throughput FIRST, right after warmup: the 70-query sweep
@@ -162,11 +161,11 @@ object Bench {
     val SlowQuerySec = 2.0
     val results = selected.sortBy(_._1).map { case (name, fn) =>
       gcIfDirty() // outside the timed region — see the note above
-      val t1 = runOne(fn)
-      val t2 = runOne(fn)
+      val t1 = runOne(name, fn)
+      val t2 = runOne(name, fn)
       val ok2 = Seq(t1, t2).filter(_ >= 0)
       val samples =
-        if (ok2.nonEmpty && ok2.min >= SlowQuerySec) Seq(t1, t2, runOne(fn))
+        if (ok2.nonEmpty && ok2.min >= SlowQuerySec) Seq(t1, t2, runOne(name, fn))
         else Seq(t1, t2)
       val ok = samples.filter(_ >= 0)
       val best = if (ok.isEmpty) -1.0 else ok.min

@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * - AQE on: runtime coalescing + skew-join splitting are the 100 TB story
   *   for the skewed shuffles this engine can produce.
   * - `nanosAsLong`: INT64 TIMESTAMP(NANOS) event files read as a long, which
-  *   `Bars.readEvents` and `Streams.eventsSchemaOf` truncate to µs.
+  *   `Bars.decodeTs` truncates to µs for both `Bars.readEvents` and
+  *   `Streams.readEventStreamFrom`.
   * - RocksDB state store: `transformWithState` (`Streams.pipelineDedupRsi`)
   *   runs on no other provider, and state stays off the heap.
   * - `file://` through [[graft.source.LocalFs]]: no shell process per

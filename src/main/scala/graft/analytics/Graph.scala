@@ -1,7 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.source.Checkpoint
 import graft.source.Checkpoint.PinOps
 
@@ -160,70 +161,25 @@ object Graph {
     * L1 deltas (tol runs only; one Double per executed round) — the
     * observables the early-exit spec and the oracle-parity margin guard
     * pin (fewer rounds on a fast-converging graph, output bit-identical to
-    * the fixed-round run of the same length). */
+    * the fixed-round run of the same length). With `seeds` it is the loop
+    * of [[personalizedPageRank]]: the same setup, rounds and checkpoints,
+    * with the restart terms of [[rankSetup]]'s seeded branch. */
   private[graft] def pageRankWithRounds(edges: DataFrame, iters: Int = PrIters,
       damping: Double = PrDamping, tol: Option[Double] = None,
-      tolFrom: Int = 1): (DataFrame, Int, List[Double]) = {
-    // the RAW edge list materializes first: the node table and every round
-    // derive from it, and without this checkpoint each derivation
-    // re-evaluates the caller's edge plan (a fact-table scan + distinct
-    // for every registered graph) — measured ~2 s of redundant scans per
-    // query at sf0.1
-    val e0 = edges.pinned()
-    // node table with outdeg: ONE pinned pass derives the node set, node
-    // count, out-degrees, dangling set/count AND the edge count (sum of
-    // outdeg). outdeg rides the union's src-marker (1 per outgoing edge,
-    // summed), so the r13 shape's SEPARATE groupBy("src") degree aggregate
-    // over the same edges — and the (src, dst, outdeg) edge-table join +
-    // repartition + second edge checkpoint it fed — disappear entirely:
-    // the division rank/outdeg is per-NODE constant, so it now happens on
-    // the node-sized rank side of the round join ([[prRound]]) and the
-    // rounds scan the RAW 2-column edge list.
-    val nodeTab = e0.select(col("src").as("node"), lit(1L).as("o"))
-      .unionAll(e0.select(col("dst").as("node"), lit(0L).as("o")))
-      .groupBy("node").agg(sum(col("o")).as("outdeg")).pinned()
-    val cnts = nodeTab.agg(count(lit(1)),
-      sum((col("outdeg") === 0L).cast("long")), sum(col("outdeg"))).head()
-    val n = cnts.getLong(0)
-    val nDangling = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
-    val m = if (cnts.isNullAt(2)) 0L else cnts.getLong(2)
-    // dangling = dst-only nodes (no outgoing edge); their per-round rank
-    // sum is the redistribution term — a filter over the pinned node table
-    val dangling = nodeTab.filter(col("outdeg") === 0L).select("node")
-    // broadcast-path rounds scan the raw pinned edges (coalesced to the
-    // fewest tasks the row count justifies); above the broadcast gate the
-    // edges are hash-partitioned on src ONCE so every round's rank join is
-    // co-partitioned — the repartition is skipped on the broadcast path,
-    // where the rank side ships to the edges and e's partitioning is moot
-    val e =
-      if (n <= RankBroadcastMaxNodes) roundSized(e0, m)
-      else e0.repartition(col("src")).pinned()
-    val teleport = lit(1.0 - damping) / lit(n.toDouble)
-    // outdeg rides the zero-contribution rows (every node appears in
-    // `zeros` exactly once, so max(outdeg) inside the contribution
-    // aggregate recovers it — the PPR tp-vector trick applied to the
-    // degree): each round's output then carries its own next-round
-    // contribution cpn = rank/outdeg, and the rounds need NO per-round
-    // rank-prep join at all. Map-side partial aggregation collapses the
-    // edge rows before the exchange, so the extra long column never
-    // inflates the wide shuffle beyond node-sized partials.
-    val zeros = nodeTab.select(col("node"), lit(0.0).as("c"), col("outdeg"))
-    var ranks = nodeTab.select(col("node"), lit(1.0 / n).as("rank"),
-      when(col("outdeg") > 0L, lit(1.0 / n) / col("outdeg"))
-        .otherwise(lit(0.0)).as("cpn"))
+      tolFrom: Int = 1, seeds: Option[DataFrame] = None): (DataFrame, Int, List[Double]) = {
+    val st = rankSetup(edges, seeds, damping)
+    var ranks = st.ranks0
     var round = 0
     var converged = false
     var deltas = List.empty[Double]
-    val dangOpt = if (nDangling == 0L) None else Some(dangling)
     // per-round pin via the stride policy: identical eager local
     // checkpoint locally, k-th-round durable pins on a cluster
     val rounds = new Checkpoint.Rounds(edges.sparkSession)
     // the loop's shuffles are all node-table-sized — run them at the
     // edge-count-derived partition count (see EdgeRowsPerShufflePartition)
-    val sealedRanks = withRoundShuffle(edges.sparkSession, m) {
+    val sealedRanks = withRoundShuffle(edges.sparkSession, st.m) {
       while (round < iters && !converged) {
-        val next = rounds.pin(
-          prRound(e, zeros, ranks, teleport, damping, n, dangOpt))
+        val next = rounds.pin(prRound(st, ranks))
         // checks before round `tolFrom` are skipped BY RULE (mirrored by the
         // oracle replay): each check is a per-round driver action, and the
         // early deltas sit orders above any useful tol
@@ -246,49 +202,127 @@ object Graph {
     (sealedRanks.select("node", "rank"), round, deltas.reverse)
   }
 
-  /** One damped PageRank round. Exposed pre-checkpoint so PlanSpec can
-    * assert the physical shape: ONE join (the rank table onto the raw
-    * 2-column edge list — broadcast below [[RankBroadcastMaxNodes]],
-    * co-partitioned above it) + ONE wide shuffle (the contribution
-    * aggregate). The per-edge contribution rank/outdeg is a per-NODE
-    * constant, so `ranks` carries it precomputed as `cpn` (each round's
-    * output derives the next round's cpn in the same projection — N
-    * divisions per round, not M), and `zeros` carries `outdeg` on the
-    * zero-contribution rows so max(outdeg) inside the contribution
-    * aggregate recovers it without any per-round join back to the node
-    * table. `dangling`, when present, is the checkpointed dangling-node
-    * set: its rank mass D/N is computed IN-PLAN as a 1-row aggregate
-    * crossJoined (broadcast) into the round, so a dangling graph still
-    * runs ONE job per round — no per-round driver scalar action. On
-    * dangling-free graphs (None) the addend is an exact +0.0 literal,
-    * preserving bit-parity with the historic round. */
-  private[graft] def prRound(e: DataFrame, zeros: DataFrame, ranks: DataFrame,
-      teleport: org.apache.spark.sql.Column, damping: Double, n: Long,
-      dangling: Option[DataFrame] = None): DataFrame = {
-    val rc = ranks.select(col("node"), col("cpn"))
-    val r = if (n <= RankBroadcastMaxNodes) broadcast(rc) else rc
-    val contribs = e.join(r, e("src") === r("node"))
-      .select(col("dst").as("node"), col("cpn").as("c"),
-        lit(null).cast("long").as("outdeg"))
-      .unionAll(zeros) // teleport floor for nodes with no inbound mass
-      .groupBy("node")
-      .agg(sum(col("c")).as("_s"), max(col("outdeg")).as("outdeg"))
-    val newRank = dangling match {
+  /** What every round of a damped rank loop reads, fixed once by
+    * [[rankSetup]]: the round edge layout `e`, the zero-contribution rows
+    * `zeros` (node, c = 0.0, outdeg, then the restart's per-node inputs),
+    * the round-0 ranks, the restart terms, the dangling-node set (None
+    * when no node is dangling) and the node and edge counts.
+    *
+    * `teleport` is the per-node restart addend and `share` maps the
+    * round's dangling mass D to a node's share of it — (1−d)/N and D/N for
+    * [[pageRank]], (1−d)·tp and D·tp for [[personalizedPageRank]]. Each
+    * keeps its own double operations in its own order, so neither
+    * recursion's ranks depend on the other's. */
+  private[graft] final case class RankSetup(e: DataFrame, zeros: DataFrame,
+      ranks0: DataFrame, teleport: Column, share: Column => Column,
+      damping: Double, dangling: Option[DataFrame], n: Long, m: Long)
+
+  /** The setup of [[pageRankWithRounds]]: `seeds` (a `node` column) turns
+    * the uniform restart into the seed indicator of [[personalizedPageRank]].
+    * Fails when seeds are given and none of them is a node. */
+  private[graft] def rankSetup(edges: DataFrame, seeds: Option[DataFrame],
+      damping: Double): RankSetup = {
+    // the RAW edge list materializes first: the node table and every round
+    // derive from it, and without this checkpoint each derivation
+    // re-evaluates the caller's edge plan (a fact-table scan + distinct
+    // for every registered graph) — measured ~2 s of redundant scans per
+    // query at sf0.1
+    val e0 = edges.pinned()
+    // node table with outdeg (and PPR's seed flag): ONE pinned pass + one
+    // 1-row action yield the node, dangling, seed and edge (sum of outdeg)
+    // counts. outdeg rides the union's src-marker, and rank/outdeg is
+    // divided on the node-sized rank side ([[prRound]]), so the rounds scan
+    // the RAW 2-column edge list.
+    val deg = e0.select(col("src").as("node"), lit(1L).as("o"))
+      .unionAll(e0.select(col("dst").as("node"), lit(0L).as("o")))
+      .groupBy("node").agg(sum(col("o")).as("outdeg"))
+    val nodeTab = seeds.fold(deg) { sd =>
+      deg.join(sd.select(col("node")).distinct().withColumn("_seed", lit(true)),
+          Seq("node"), "left")
+        .select(col("node"), col("outdeg"), col("_seed").isNotNull.as("is_seed"))
+    }.pinned()
+    val cnts = nodeTab.agg(count(lit(1)),
+      Seq(sum((col("outdeg") === 0L).cast("long")), sum(col("outdeg"))) ++
+        seeds.map(_ => sum(col("is_seed").cast("long"))): _*).head()
+    val n = cnts.getLong(0)
+    val nDangling = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
+    val m = if (cnts.isNullAt(2)) 0L else cnts.getLong(2)
+    // `t` is the restart distribution over the node table and the round-0
+    // rank; the restart terms reach the round through `teleport`/`share`,
+    // PPR's tp as a column carried on the zero-contribution rows
+    val (t, teleport, share) = seeds match {
       case None =>
-        contribs.select(col("node"),
-          (teleport + lit(damping) * (col("_s") + lit(0.0))).as("rank"),
-          col("outdeg"))
+        (lit(1.0 / n), lit(1.0 - damping) / lit(n.toDouble),
+          (d: Column) => d / lit(n.toDouble))
+      case Some(_) =>
+        val nSeeds = if (cnts.isNullAt(3)) 0L else cnts.getLong(3)
+        require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
+        (when(col("is_seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)),
+          lit(1.0 - damping) * col("tp"), (d: Column) => d * col("tp"))
+    }
+    // broadcast-path rounds scan the raw pinned edges (coalesced to the
+    // fewest tasks the row count justifies); above the broadcast gate the
+    // edges are hash-partitioned on src ONCE so every round's rank join is
+    // co-partitioned — the repartition is skipped on the broadcast path,
+    // where the rank side ships to the edges and e's partitioning is moot
+    val e =
+      if (n <= RankBroadcastMaxNodes) roundSized(e0, m)
+      else e0.repartition(col("src")).pinned()
+    // every node appears in `zeros` exactly once; map-side partial
+    // aggregation collapses the edge rows before the exchange, so the
+    // carried columns never inflate the wide shuffle beyond node-sized
+    // partials
+    val zeros = nodeTab.select(Seq(col("node"), lit(0.0).as("c"), col("outdeg")) ++
+      seeds.map(_ => t.as("tp")): _*)
+    val ranks0 = nodeTab.select(col("node"), t.as("rank"),
+      when(col("outdeg") > 0L, t / col("outdeg")).otherwise(lit(0.0)).as("cpn"))
+    // dangling = dst-only nodes (no outgoing edge); their per-round rank
+    // sum is the redistribution term — a filter over the pinned node table
+    val dangling =
+      if (nDangling == 0L) None
+      else Some(nodeTab.filter(col("outdeg") === 0L).select("node"))
+    RankSetup(e, zeros, ranks0, teleport, share, damping, dangling, n, m)
+  }
+
+  /** One damped rank round. Exposed pre-checkpoint so PlanSpec can assert
+    * the physical shape: ONE join (the rank table onto the raw 2-column
+    * edge list — broadcast below [[RankBroadcastMaxNodes]], co-partitioned
+    * above it) + ONE wide shuffle (the contribution aggregate). The
+    * per-edge contribution rank/outdeg is a per-NODE constant, so `ranks`
+    * carries it precomputed as `cpn` (each round's output derives the next
+    * round's cpn in the same projection — N divisions per round, not M),
+    * and the zero-contribution rows carry `outdeg` (and PPR's `tp`) so
+    * max() inside the contribution aggregate recovers them without any
+    * per-round join back to the node table. On a graph with dangling
+    * nodes, their rank mass D is computed IN-PLAN as a 1-row aggregate
+    * crossJoined (broadcast) into the round, so the round still runs ONE
+    * job — no per-round driver scalar action. On dangling-free graphs D is
+    * an exact +0.0 literal, preserving bit-parity with the historic
+    * round. */
+  private[graft] def prRound(st: RankSetup, ranks: DataFrame): DataFrame = {
+    val rc = ranks.select(col("node"), col("cpn"))
+    val r = if (st.n <= RankBroadcastMaxNodes) broadcast(rc) else rc
+    // every zeros column past (node, c) is per-node: NULL on the edge rows
+    val carried = st.zeros.schema.fields.toSeq.drop(2)
+    val contribs = st.e.join(r, st.e("src") === r("node"))
+      .select(Seq(col("dst").as("node"), col("cpn").as("c")) ++
+        carried.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      .unionAll(st.zeros) // teleport floor for nodes with no inbound mass
+      .groupBy("node")
+      .agg(sum(col("c")).as("_s"), carried.map(f => max(col(f.name)).as(f.name)): _*)
+    val (withD, d) = st.dangling match {
+      case None => (contribs, lit(0.0))
       case Some(dang) =>
         val dm = ranks.join(dang, "node")
-          .agg((coalesce(sum(col("rank")), lit(0.0)) / lit(n.toDouble)).as("_dm"))
-        contribs.crossJoin(broadcast(dm))
-          .select(col("node"),
-            (teleport + lit(damping) * (col("_s") + col("_dm"))).as("rank"),
-            col("outdeg"))
+          .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dm"))
+        (contribs.crossJoin(broadcast(dm)), col("_dm"))
     }
-    newRank.select(col("node"), col("rank"),
-      when(col("outdeg") > 0L, col("rank") / col("outdeg"))
-        .otherwise(lit(0.0)).as("cpn"))
+    withD.select(col("node"),
+        (st.teleport + lit(st.damping) * (col("_s") + st.share(d))).as("rank"),
+        col("outdeg"))
+      .select(col("node"), col("rank"),
+        when(col("outdeg") > 0L, col("rank") / col("outdeg"))
+          .otherwise(lit(0.0)).as("cpn"))
   }
 
   /** Personalized PageRank (random walk with restart to a SEED set) over an
@@ -306,93 +340,13 @@ object Graph {
     * spec invariant). Seeds outside the node set are ignored (they have no
     * edges to walk).
     *
-    * Scale shape: identical to [[pageRank]] — the teleport vector lives as
-    * a `tp` column on the checkpointed node table (hash-partitioned on
-    * node, so the per-round join to the contribution aggregate is
-    * co-partitioned, no exchange); the dangling-mass scalar is the same
-    * in-plan 1-row broadcast crossJoin; never a collected vertex or seed
-    * set on the driver. */
+    * Scale shape: [[pageRank]]'s own loop — the seed flag rides the pinned
+    * node table and `tp` the zero-contribution rows, so the round keeps
+    * ONE join + ONE wide shuffle; never a collected vertex or seed set on
+    * the driver. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = PrIters, damping: Double = PrDamping): DataFrame = {
-    // raw edges materialize first — same redundant-rescan fix as
-    // [[pageRankWithRounds]] (the node table and every round re-evaluate
-    // the caller's edge plan otherwise)
-    val e0 = edges.pinned()
-    // fused node/outdeg/seed/dangling derivation — ONE pinned pass + one
-    // 1-row action yields the node count, out-degrees, dangling count,
-    // seed count and edge count (the r13 shape ran a separate degree
-    // aggregate, an edge-table join + repartition + second edge
-    // checkpoint, a distinct, a seed-join count, an anti-join and two
-    // more count actions for the same facts)
-    val seedFlag = seeds.select(col("node")).distinct()
-      .withColumn("_seed", lit(true))
-    val nodeTab = e0.select(col("src").as("node"), lit(1L).as("o"))
-      .unionAll(e0.select(col("dst").as("node"), lit(0L).as("o")))
-      .groupBy("node").agg(sum(col("o")).as("outdeg"))
-      .join(seedFlag, Seq("node"), "left")
-      .select(col("node"), col("outdeg"), col("_seed").isNotNull.as("is_seed"))
-      .pinned()
-    val cnts = nodeTab.agg(count(lit(1)),
-      sum((col("outdeg") === 0L).cast("long")),
-      sum(col("is_seed").cast("long")), sum(col("outdeg"))).head()
-    val nNodes = cnts.getLong(0)
-    val nDangling = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
-    val nSeeds = if (cnts.isNullAt(2)) 0L else cnts.getLong(2)
-    val m = if (cnts.isNullAt(3)) 0L else cnts.getLong(3)
-    require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
-    val tpCol = when(col("is_seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
-    val dangling = nodeTab.filter(col("outdeg") === 0L).select("node")
-    // same scale-gated edge layout as [[pageRankWithRounds]]: raw pinned
-    // edges (coalesced) below the broadcast gate, src-partitioned above it
-    val e =
-      if (nNodes <= RankBroadcastMaxNodes) roundSized(e0, m)
-      else e0.repartition(col("src")).pinned()
-    // the teleport vector AND the out-degree ride the zero-contribution
-    // rows: every node appears in `zeros` exactly once, so max(tp) /
-    // max(outdeg) inside the SAME contribution aggregate recover both and
-    // the round needs NO extra per-round join back to the node table
-    // (edge-side rows carry NULL); each round's output then derives its
-    // own next-round contribution cpn = rank/outdeg in the same
-    // projection — see [[prRound]]'s note
-    val zeros = nodeTab.select(col("node"), lit(0.0).as("c"), tpCol.as("tp"),
-      col("outdeg"))
-    var ranks = nodeTab.select(col("node"), tpCol.as("rank"),
-      when(col("outdeg") > 0L, tpCol / col("outdeg"))
-        .otherwise(lit(0.0)).as("cpn"))
-    val rounds = new Checkpoint.Rounds(edges.sparkSession)
-    // node-table-sized loop shuffles at the edge-count-derived partition
-    // count — see [[EdgeRowsPerShufflePartition]]
-    val sealedRanks = withRoundShuffle(edges.sparkSession, m) {
-    for (_ <- 1 to iters) {
-      val rc = ranks.select(col("node"), col("cpn"))
-      val r = if (nNodes <= RankBroadcastMaxNodes) broadcast(rc) else rc
-      val contribs = e.join(r, e("src") === r("node"))
-        .select(col("dst").as("node"), col("cpn").as("c"),
-          lit(null).cast("double").as("tp"), lit(null).cast("long").as("outdeg"))
-        .unionAll(zeros)
-        .groupBy("node").agg(sum(col("c")).as("_s"), max(col("tp")).as("tp"),
-          max(col("outdeg")).as("outdeg"))
-      val withDm =
-        if (nDangling == 0L) contribs.withColumn("_dm", lit(0.0))
-        else {
-          val dm = ranks.join(dangling, "node")
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dm"))
-          contribs.crossJoin(broadcast(dm))
-        }
-      ranks = rounds.pin(withDm
-        .select(col("node"),
-          (lit(1.0 - damping) * col("tp") +
-            lit(damping) * (col("_s") + col("_dm") * col("tp"))).as("rank"),
-          col("outdeg"))
-        .select(col("node"), col("rank"),
-          when(col("outdeg") > 0L, col("rank") / col("outdeg"))
-            .otherwise(lit(0.0)).as("cpn")))
-    }
-    rounds.seal(ranks)
-    }
-    // the cpn carry column is round-internal; the contract stays (node, rank)
-    sealedRanks.select("node", "rank")
-  }
+      iters: Int = PrIters, damping: Double = PrDamping): DataFrame =
+    pageRankWithRounds(edges, iters, damping, seeds = Some(seeds))._1
 
   /** Wedge centers above this degree are excluded from [[linkPrediction]]
     * candidate generation. A center of degree k fans out k(k−1)/2 wedge
@@ -404,29 +358,6 @@ object Graph {
     * oracle applies the identical cap so parity holds at any SF. */
   val LinkPredMaxCenterDegree = 256
 
-  /** Link prediction over an undirected (a < b) edge list: for every
-    * NON-adjacent pair with at least one common neighbor, the three
-    * classic scores —
-    *
-    *   cn      = |N(u) ∩ N(v)|                 (common neighbors)
-    *   jaccard = cn / |N(u) ∪ N(v)|
-    *   aa      = Σ_{w ∈ N(u)∩N(v)} 1 / ln(deg w)   (Adamic–Adar)
-    *
-    * — keeping the global top `k` by the INTEGER key (cn DESC, u, v), so
-    * the selection boundary is bit-deterministic across engines (ranking
-    * by a float score would let 1-ulp cross-engine drift flip ties at the
-    * cut; aa and jaccard ride along as reported columns).
-    *
-    * Scale shape, two-path: at or below [[LinkPredBroadcastMaxEdges]] the
-    * sorted adjacency broadcasts and wedges are counted MAP-SIDE with no
-    * wedge shuffle at all ([[topPairsBroadcastLong]]); above it, each
-    * wedge u−w−v is generated at its center w as the strictly-greater
-    * suffix of w's sorted neighbor array and counted per source by
-    * [[topPairsPerSource]]. On both paths centers above
-    * [[LinkPredMaxCenterDegree]] are excluded (see its note), bounding
-    * the wedge volume; existing edges are dropped against N(u); only each
-    * u's (cn DESC, v) top-k survives to the global TakeOrdered. Degree-1
-    * centers form no wedge, so 1/ln(deg) never divides by zero. */
   /** Counter-entry cap per source group in [[topPairsPerSource]]: a hub
     * SOURCE node's candidate set is unbounded (its degree is not capped —
     * only wedge centers are), so a group whose counter would exceed this
@@ -461,26 +392,19 @@ object Graph {
     * flush, so summing the partials downstream reproduces cn exactly, and
     * the relational tail (groupBy sum → edge anti-join → global
     * TakeOrdered) finishes those pairs with no per-node hot spot. Memory
-    * per task stays bounded no matter the degree distribution.
-    *
-    * Generic over the node id type; the JVM Ordering must agree with
-    * Spark's native sort for the id type — trivially true for integral
-    * ids, and the String instantiation passes [[graft.Utf8Order.ofString]]
-    * so supplementary-plane ids tie-break identically to the engine. */
-  private def topPairsPerSource[T](contrib: DataFrame, e: DataFrame, k: Int,
-      maxCounterEntries: Int)(implicit
-      ord: Ordering[T],
-      keyEnc: org.apache.spark.sql.Encoder[T],
-      inEnc: org.apache.spark.sql.Encoder[(T, T, Array[T])],
-      outEnc: org.apache.spark.sql.Encoder[(T, T, Long, Boolean)]): DataFrame = {
-    val candOrd: Ordering[(T, Long)] =
-      Ordering.Tuple2(Ordering.Long.reverse, ord).on { case (v, c) => (c, v) }
-    val raw = contrib.as[(T, T, Array[T])](inEnc)
-      .groupByKey(_._1)(keyEnc)
-      .flatMapGroups { (u: T, it: Iterator[(T, T, Array[T])]) =>
-        val nu = new java.util.HashSet[T]()
-        val cnt = new java.util.HashMap[T, Long]()
-        var flushed = List.empty[Iterator[(T, T, Long, Boolean)]]
+    * per task stays bounded no matter the degree distribution. */
+  private def topPairsPerSource(contrib: DataFrame, e: DataFrame, k: Int,
+      maxCounterEntries: Int): DataFrame = {
+    val sess = contrib.sparkSession
+    import sess.implicits._
+    val candOrd: Ordering[(Long, Long)] =
+      Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long).on { case (v, c) => (c, v) }
+    val raw = contrib.as[(Long, Long, Array[Long])]
+      .groupByKey(_._1)
+      .flatMapGroups { (u: Long, it: Iterator[(Long, Long, Array[Long])]) =>
+        val nu = new java.util.HashSet[Long]()
+        val cnt = new java.util.HashMap[Long, Long]()
+        var flushed = List.empty[Iterator[(Long, Long, Long, Boolean)]]
         it.foreach { case (_, w, vs) =>
           if (flushed.isEmpty) nu.add(w) // probe set unused once flushing
           var i = 0
@@ -489,7 +413,7 @@ object Graph {
             i += 1
           }
           if (cnt.size > maxCounterEntries) {
-            val part = new Array[(T, T, Long, Boolean)](cnt.size)
+            val part = new Array[(Long, Long, Long, Boolean)](cnt.size)
             var j = 0
             cnt.forEach { (v, c) => part(j) = (u, v, c, false); j += 1 }
             cnt.clear()
@@ -497,17 +421,17 @@ object Graph {
           }
         }
         if (flushed.isEmpty) {
-          val cand = new scala.collection.mutable.ArrayBuffer[(T, Long)]()
+          val cand = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
           cnt.forEach { (v, c) => if (!nu.contains(v)) cand += ((v, c)) }
           cand.sortInPlace()(candOrd)
           cand.take(k).iterator.map { case (v, c) => (u, v, c, true) }
         } else {
-          val rest = new Array[(T, T, Long, Boolean)](cnt.size)
+          val rest = new Array[(Long, Long, Long, Boolean)](cnt.size)
           var j = 0
           cnt.forEach { (v, c) => rest(j) = (u, v, c, false); j += 1 }
           (rest.iterator :: flushed).reduceLeft(_ ++ _)
         }
-      }(outEnc)
+      }
       .toDF("u", "v", "cn", "done")
       .pinned() // both branches below read it; compute once
     val fast = raw.filter(col("done")).select("u", "v", "cn")
@@ -538,11 +462,11 @@ object Graph {
     * greater suffix once; v ∈ N(u) is dropped; u's top k by (cn DESC, v)
     * survive — the same per-u prefix the shuffled path emits.
     *
-    * This Long specialization tallies wedges with a primitive sort +
-    * run-length scan (no boxing, no per-wedge hashing — the garbage of
-    * ~10⁸ boxed HashMap merges was exactly the debris class r14's bench
-    * valve existed for) and selects top-k with a primitive 2-array heap. */
-  private def topPairsBroadcastLong(adj: DataFrame, k: Int,
+    * Wedges are tallied with a primitive sort + run-length scan (no
+    * boxing, no per-wedge hashing — the garbage of ~10⁸ boxed HashMap
+    * merges was exactly the debris class r14's bench valve existed for)
+    * and top-k is selected with a primitive 2-array heap. */
+  private def topPairsBroadcast(adj: DataFrame, k: Int,
       cap: Int): DataFrame = {
     val sess = adj.sparkSession
     import sess.implicits._
@@ -626,56 +550,40 @@ object Graph {
     }.toDF("u", "v", "cn")
   }
 
-  /** Generic (Int / String id) instantiation of the broadcast wedge
-    * counting — java HashMap tally + the shuffled fast path's exact
-    * candidate sort; see [[topPairsBroadcastLong]] for the semantics
-    * argument. The sorted-adjacency suffix search runs under `ord`, which
-    * must agree with the engine's `sort_array` order (integral ids
-    * trivially; String passes [[graft.Utf8Order.ofString]]). */
-  private def topPairsBroadcast[T](adj: DataFrame, k: Int, cap: Int)(implicit
-      ord: Ordering[T],
-      inEnc: org.apache.spark.sql.Encoder[(T, Array[T])],
-      outEnc: org.apache.spark.sql.Encoder[(T, T, Long)]): DataFrame = {
-    val typed = adj.select("w", "ns").as[(T, Array[T])](inEnc)
-    val local = typed.collect()
-    val amap = new java.util.HashMap[T, Array[T]](local.length * 2)
-    local.foreach { case (w, ns) => amap.put(w, ns) }
-    val bc = adj.sparkSession.sparkContext.broadcast(amap)
-    val candOrd: Ordering[(T, Long)] =
-      Ordering.Tuple2(Ordering.Long.reverse, ord).on { case (v, c) => (c, v) }
-    typed.mapPartitions { it =>
-      val m = bc.value
-      it.flatMap { case (u, nu) =>
-        val cnt = new java.util.HashMap[T, Long]()
-        var i = 0
-        while (i < nu.length) {
-          val nsw = m.get(nu(i))
-          if (nsw.length <= cap) {
-            var lo = 0; var hi = nsw.length
-            while (lo < hi) {
-              val mid = (lo + hi) >>> 1
-              if (ord.gt(nsw(mid), u)) hi = mid else lo = mid + 1
-            }
-            while (lo < nsw.length) {
-              cnt.merge(nsw(lo), 1L, java.lang.Long.sum _); lo += 1
-            }
-          }
-          i += 1
-        }
-        val nuSet = new java.util.HashSet[T]()
-        nu.foreach(nuSet.add)
-        val cand = new scala.collection.mutable.ArrayBuffer[(T, Long)](cnt.size)
-        cnt.forEach { (v, c) => if (!nuSet.contains(v)) cand += ((v, c)) }
-        cand.sortInPlace()(candOrd)
-        cand.take(k).iterator.map { case (v, c) => (u, v, c) }
-      }
-    }(outEnc).toDF("u", "v", "cn")
-  }
-
+  /** Link prediction over an undirected (a < b) edge list: for every
+    * NON-adjacent pair with at least one common neighbor, the three
+    * classic scores —
+    *
+    *   cn      = |N(u) ∩ N(v)|                 (common neighbors)
+    *   jaccard = cn / |N(u) ∪ N(v)|
+    *   aa      = Σ_{w ∈ N(u)∩N(v)} 1 / ln(deg w)   (Adamic–Adar)
+    *
+    * — keeping the global top `k` by the INTEGER key (cn DESC, u, v), so
+    * the selection boundary is bit-deterministic across engines (ranking
+    * by a float score would let 1-ulp cross-engine drift flip ties at the
+    * cut; aa and jaccard ride along as reported columns).
+    *
+    * Scale shape, two-path: at or below [[LinkPredBroadcastMaxEdges]] the
+    * sorted adjacency broadcasts and wedges are counted MAP-SIDE with no
+    * wedge shuffle at all ([[topPairsBroadcast]]); above it, each
+    * wedge u−w−v is generated at its center w as the strictly-greater
+    * suffix of w's sorted neighbor array and counted per source by
+    * [[topPairsPerSource]]. On both paths centers above
+    * [[LinkPredMaxCenterDegree]] are excluded (see its note), bounding
+    * the wedge volume; existing edges are dropped against N(u); only each
+    * u's (cn DESC, v) top-k survives to the global TakeOrdered. Degree-1
+    * centers form no wedge, so 1/ln(deg) never divides by zero.
+    *
+    * Node ids must be bigint (anything else fails fast): a caller with
+    * other ids encodes them at the boundary and decodes the output, as
+    * the packed edge builders and [[unpackNode]] do. */
   def linkPrediction(edges: DataFrame, k: Int = 100,
       maxCenterDegree: Int = LinkPredMaxCenterDegree,
       maxCounterEntries: Int = LinkPredMaxCounterEntries,
       broadcastMaxEdges: Long = LinkPredBroadcastMaxEdges): DataFrame = {
+    val idType = edges.schema("a").dataType
+    require(idType == LongType,
+      s"linkPrediction: node ids must be bigint, got ${idType.simpleString}")
     val e = edges.pinned()
     val nb = e.select(col("a").as("w"), col("b").as("n"))
       .unionAll(e.select(col("b").as("w"), col("a").as("n")))
@@ -714,23 +622,9 @@ object Graph {
     // path gate: m is a count over the already-pinned edge blocks (cheap);
     // at or below the broadcast gate the wedge stream never shuffles
     val useBroadcast = e.count() <= broadcastMaxEdges
-    import e.sparkSession.implicits._
-    val grouped = e.schema("a").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        if (useBroadcast) topPairsBroadcastLong(adj, k, maxCenterDegree)
-        else topPairsPerSource[Long](contrib, e, k, maxCounterEntries)
-      case org.apache.spark.sql.types.IntegerType =>
-        if (useBroadcast) topPairsBroadcast[Int](adj, k, maxCenterDegree)
-        else topPairsPerSource[Int](contrib, e, k, maxCounterEntries)
-      case org.apache.spark.sql.types.StringType =>
-        // tie-breaks must agree with the downstream orderBy and the oracle:
-        // UTF-8 byte order, not Java's UTF-16 code-unit compareTo
-        implicit val utf8Ord: Ordering[String] = graft.Utf8Order.ofString
-        if (useBroadcast) topPairsBroadcast[String](adj, k, maxCenterDegree)
-        else topPairsPerSource[String](contrib, e, k, maxCounterEntries)
-      case dt => throw new IllegalArgumentException(
-        s"linkPrediction: unsupported node id type ${dt.simpleString}")
-    }
+    val grouped =
+      if (useBroadcast) topPairsBroadcast(adj, k, maxCenterDegree)
+      else topPairsPerSource(contrib, e, k, maxCounterEntries)
     // pinned: `attached` below feeds BOTH the output projection and the
     // aa aggregate, so an unpinned top would re-run the whole wedge
     // count per consumer (measured: 2× the counting stage, +1.5 s wall)
@@ -770,6 +664,18 @@ object Graph {
     * chained-CTE replay (2 CTEs per round) stays readable. */
   val HitsIters = 8
 
+  /** Early-exit tolerance for [[graft.queries.Analytics.graphHits]]: the
+    * customer→part HITS recursion contracts its hub L1 delta ~0.1×/round
+    * (measured at all three SFs), so 2e-5 sits inside the round-4/round-5
+    * gap (3.1e-5 / 6.0e-6 at the tightest SF) and the run exits after 5 of
+    * the 8 budget rounds. Oracle parity is the same budget-replay
+    * pass-through as [[PrDirectedTol]]; the query's margin guard makes a
+    * near-tol delta loud. */
+  val HitsTol = 2e-5
+
+  /** First tol-checked HITS round — see [[PrDirectedTolFrom]]. */
+  val HitsTolFrom = 4
+
   /** HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED edge list
     * (`src`, `dst`), L1-normalized each half-step:
     *
@@ -786,22 +692,10 @@ object Graph {
     * Scale shape: identical cost envelope to a PageRank round, twice —
     * each half-step is ONE keyed join (scores broadcast at or below
     * [[RankBroadcastMaxNodes]] nodes, co-partitioned with the checkpointed
-    * edge list above) + ONE grouped sum; the L1 scalar is an in-plan
-    * 1-row aggregate crossJoined back (broadcast), never a per-round
-    * driver action. Scores are localCheckpoint'ed per round to truncate
-    * lineage. */
-  /** Early-exit tolerance for [[graft.queries.Analytics.graphHits]]: the
-    * customer→part HITS recursion contracts its hub L1 delta ~0.1×/round
-    * (measured at all three SFs), so 2e-5 sits inside the round-4/round-5
-    * gap (3.1e-5 / 6.0e-6 at the tightest SF) and the run exits after 5 of
-    * the 8 budget rounds. Oracle parity is the same budget-replay
-    * pass-through as [[PrDirectedTol]]; the query's margin guard makes a
-    * near-tol delta loud. */
-  val HitsTol = 2e-5
-
-  /** First tol-checked HITS round — see [[PrDirectedTolFrom]]. */
-  val HitsTolFrom = 4
-
+    * edge list above) + ONE grouped sum; the L1 scalar is one eager
+    * 1-row aggregate per half-step over the pinned sums (see the note in
+    * [[hitsWithRounds]]). Scores are localCheckpoint'ed per round to
+    * truncate lineage. */
   def hits(edges: DataFrame, iters: Int = HitsIters): DataFrame =
     hitsWithRounds(edges, iters, None)._1
 
@@ -952,8 +846,7 @@ object Graph {
 
   /** Decode a packed node id (even → `<evenPrefix><id/2>`, odd →
     * `<oddPrefix><(id-1)/2>`) back to its public prefix-string form. */
-  def unpackNode(id: org.apache.spark.sql.Column, evenPrefix: String,
-      oddPrefix: String): org.apache.spark.sql.Column =
+  def unpackNode(id: Column, evenPrefix: String, oddPrefix: String): Column =
     when(id.bitwiseAND(1L) === 0L,
         concat(lit(evenPrefix), shiftright(id, 1).cast("string")))
       .otherwise(concat(lit(oddPrefix), shiftright(id, 1).cast("string")))

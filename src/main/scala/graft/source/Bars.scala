@@ -3,6 +3,7 @@ package graft.source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Bar-source: normalize raw event rows into the canonical OHLCV bar frame.
   *
@@ -26,31 +27,30 @@ object Bars {
     * Single source of truth shared with the oracle SQL builders. */
   val DefaultSymbols: Int = graft.Params.Symbols
 
-  /** Read the shared events table, normalizing its timestamp column to
-    * session-zoned TimestampType (µs, UTC session).
+  /** Read the shared events table, its timestamp decoded by [[decodeTs]].
+    * This mirrors the reference's defensive datetime normalization at the
+    * ingest edge (reference: src/data/ingestion.py:63-104, 177-180).
+    */
+  def readEvents(spark: SparkSession, sfDir: String): DataFrame =
+    decodeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+
+  /** Normalize raw events' `ts` column to session-zoned TimestampType (µs,
+    * UTC session) — the one decode the batch read and the file stream
+    * ([[graft.streaming.Streams.readEventStreamFrom]]) share.
     *
     * Driver-generated parquet has shipped `ts` in two physical forms across
     * regenerations: INT64 TIMESTAMP(NANOS) (arrives as a long of nanoseconds
     * under `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession`
-    * sets, truncated to µs here —
-    * the same truncation DuckDB applies) and TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) (arrives as TIMESTAMP_NTZ; cast to TimestampType
-    * is an exact micros identity under the UTC session timezone, matching
-    * DuckDB's naive read). Dispatching on the observed schema keeps every
-    * downstream `unix_micros`/window/watermark on one canonical type.
-    * This mirrors the reference's defensive datetime normalization at the
-    * ingest edge (reference: src/data/ingestion.py:63-104, 177-180).
-    */
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    * sets, truncated to µs here — the same truncation DuckDB applies) and
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) (arrives as TIMESTAMP_NTZ;
+    * cast to TimestampType is an exact micros identity under the UTC
+    * session timezone, matching DuckDB's naive read). A `ts` that already
+    * is TimestampType takes the same cast, which the optimizer drops.
+    * Dispatching on the observed schema keeps every downstream
+    * `unix_micros`/window/watermark on one canonical type. */
+  private[graft] def decodeTs(raw: DataFrame): DataFrame = raw.schema("ts").dataType match {
+    case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
   }
 
   /** events → bars adapter. Deterministic, oracle-checkable (FIXTURES.md §4):

@@ -26,10 +26,10 @@ object Streams {
     * (INT64 TIMESTAMP(NANOS) → LongType under `GraftSession`'s nanosAsLong;
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ), so hardcoding either breaks
     * silently at the next regeneration. One batch footer read resolves the
-    * observed form; [[readEventStreamFrom]] then applies the matching
-    * normalization so every downstream window/watermark sees one canonical
-    * session-zoned TimestampType — identical to the batch ingest. Any third
-    * physical form fails fast here rather than mid-stream. */
+    * observed form; [[readEventStreamFrom]] then decodes it with the batch
+    * ingest's own [[graft.source.Bars.decodeTs]], so every downstream
+    * window/watermark sees one canonical session-zoned TimestampType. Any
+    * third physical form fails fast here rather than mid-stream. */
   def eventsSchemaOf(spark: SparkSession, dir: String): StructType = {
     val s = spark.read.parquet(dir).schema
     s("ts").dataType match {
@@ -78,12 +78,7 @@ object Streams {
     val schema = eventsSchemaOf(spark, dir)
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    val raw = reader.parquet(dir)
-    schema("ts").dataType match {
-      case LongType => // INT64 TIMESTAMP(NANOS): ns→µs truncation, as batch
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.source.Bars.decodeTs(reader.parquet(dir))
   }
 
   /** Watermarked tumbling counts — the streaming twin of

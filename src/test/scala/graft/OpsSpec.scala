@@ -3146,16 +3146,17 @@ class OpsSpec extends SparkSpec {
   test("linkPrediction: hand values on a planted graph, hub cap excludes centers") {
     val s = spark
     import s.implicits._
-    // a-b, a-c, b-d, c-d, d-e: degrees a2 b2 c2 d3 e1
-    val edges = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"))
+    // a-b, a-c, b-d, c-d, d-e as 1..5: degrees a2 b2 c2 d3 e1
+    val (a, b, c, d, e) = (1L, 2L, 3L, 4L, 5L)
+    val edges = Seq((a, b), (a, c), (b, d), (c, d), (d, e))
       .toDF("a", "b")
     val got = graft.analytics.Graph.linkPrediction(edges)
       .orderBy(col("cn").desc, col("u"), col("v")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     val ln2 = math.log(2.0); val ln3 = math.log(3.0)
     assert(got.map(t => (t._1, t._2)).toSeq ==
-      Seq(("a", "d"), ("b", "c"), ("b", "e"), ("c", "e")))
+      Seq((a, d), (b, c), (b, e), (c, e)))
     // (a,d): common {b,c}, jacc 2/(2+3-2), aa 2/ln2
     assert(got(0)._3 == 2L && math.abs(got(0)._4 - 2.0 / 3) < 1e-12 &&
       math.abs(got(0)._5 - 2.0 / ln2) < 1e-12)
@@ -3169,8 +3170,8 @@ class OpsSpec extends SparkSpec {
     }
     // cap=2 removes center d: (b,e)/(c,e) vanish, (b,c) keeps only center a
     val capped = graft.analytics.Graph.linkPrediction(edges, maxCenterDegree = 2)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(capped == Map(("a", "d") -> 2L, ("b", "c") -> 1L))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(capped == Map((a, d) -> 2L, (b, c) -> 1L))
     // hub-source flush valve: forcing the counter cap to 1 sends every
     // group through the partial-flush + relational-remainder path; output
     // must be identical (each wedge lands in exactly one flush).
@@ -3179,7 +3180,7 @@ class OpsSpec extends SparkSpec {
     val flushed = graft.analytics.Graph.linkPrediction(edges,
         maxCounterEntries = 1, broadcastMaxEdges = 0L)
       .orderBy(col("cn").desc, col("u"), col("v")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     assert(flushed.toSeq == got.toSeq, "flush path must equal counter path")
     // shuffled counter path (no flush) must equal the default broadcast
@@ -3187,26 +3188,30 @@ class OpsSpec extends SparkSpec {
     val shuffled = graft.analytics.Graph.linkPrediction(edges,
         broadcastMaxEdges = 0L)
       .orderBy(col("cn").desc, col("u"), col("v")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     assert(shuffled.toSeq == got.toSeq, "shuffled path must equal broadcast path")
     // non-canonical edge row (b, a order): both valve sides must exclude
     // the existing edge identically — the flush path's anti-join is
     // symmetric for exactly this reason
-    val nonCanon = edges.unionAll(Seq(("d", "a")).toDF("a", "b"))
+    val nonCanon = edges.unionAll(Seq((d, a)).toDF("a", "b"))
     Seq(graft.analytics.Graph.LinkPredMaxCounterEntries, 1).foreach { mce =>
       val pairs = graft.analytics.Graph
         .linkPrediction(nonCanon, maxCounterEntries = mce,
           broadcastMaxEdges = 0L)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(!pairs.contains(("a", "d")),
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(!pairs.contains((a, d)),
         s"mce=$mce: existing (reversed) edge a-d must not be predicted")
     }
     // ...and the broadcast path's N(u) probe drops the reversed edge too
     val bcPairs = graft.analytics.Graph.linkPrediction(nonCanon)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(!bcPairs.contains(("a", "d")),
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(!bcPairs.contains((a, d)),
       "broadcast path: existing (reversed) edge a-d must not be predicted")
+    // ids are bigint only: a string-id edge list fails fast, naming its type
+    val err = intercept[IllegalArgumentException](graft.analytics.Graph
+      .linkPrediction(Seq(("a", "b"), ("b", "c")).toDF("a", "b")))
+    assert(err.getMessage.contains("string"), err.getMessage)
   }
 
   test("timeToConvert: first-signup anchor, pre-signup purchases don't convert, -1 bucket kept") {

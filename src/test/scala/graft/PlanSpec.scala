@@ -389,23 +389,15 @@ class PlanSpec extends SparkSpec {
     import graft.analytics.Graph
     val s = spark
     import s.implicits._
-    // inputs built the way pageRankWithRounds builds them: a raw pinned
-    // 2-column edge list, a zeros table carrying outdeg, and a rank table
-    // carrying the precomputed per-node contribution cpn (r14 — the
-    // per-edge division moved into each round's OUTPUT projection, so the
-    // rounds scan raw (src, dst), need no rank-prep join, and the old
+    // inputs built by the operators' own setup: a raw pinned 2-column
+    // edge list, a zeros table carrying outdeg, and a rank table carrying
+    // the precomputed per-node contribution cpn (r14 — the per-edge
+    // division moved into each round's OUTPUT projection, so the rounds
+    // scan raw (src, dst), need no rank-prep join, and the old
     // (src, dst, outdeg) edge table is gone)
     val e = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"))
-      .toDF("src", "dst").localCheckpoint()
-    val nodeTab = e.select(col("src").as("node"), lit(1L).as("o"))
-      .unionAll(e.select(col("dst").as("node"), lit(0L).as("o")))
-      .groupBy("node").agg(sum(col("o")).as("outdeg")).localCheckpoint()
-    val zeros = nodeTab.select(col("node"), lit(0.0).as("c"), col("outdeg"))
-    val ranks = nodeTab.select(col("node"), lit(1.0 / 3).as("rank"),
-      when(col("outdeg") > 0L, lit(1.0 / 3) / col("outdeg"))
-        .otherwise(lit(0.0)).as("cpn"))
-      .localCheckpoint()
-    val tp = lit(0.05)
+      .toDF("src", "dst")
+    val st = Graph.rankSetup(e, None, 0.85)
     // small-n path: rank table broadcast onto the edges, contribution
     // aggregate is the only wide shuffle, and no second join materializes
     // the teleport term or the degrees (both ride the zeros rows).
@@ -413,7 +405,7 @@ class PlanSpec extends SparkSpec {
     // partitioning was built and MEASURED SLOWER at sf0.1 — columnar cache
     // scans cost more than the node-sized shuffle they saved — so this
     // one-wide-shuffle shape is the keeper; see BENCH.md.)
-    val small = Graph.prRound(e, zeros, ranks, tp, 0.85, n = 3)
+    val small = Graph.prRound(st, st.ranks0)
     assert(countOp(small, "BroadcastHashJoin") == 1,
       s"small-graph round must broadcast the rank table:\n${plan(small)}")
     assert(countOp(small, "Exchange hashpartitioning") == 1,
@@ -424,11 +416,26 @@ class PlanSpec extends SparkSpec {
     // broadcast here because this test table is tiny (size stats), which is
     // the adaptive behavior we want; the guard is the single-join,
     // single-wide-shuffle round shape that holds when stats forbid it
-    val large = Graph.prRound(e, zeros, ranks, tp, 0.85,
-      n = Graph.RankBroadcastMaxNodes + 1)
+    val large = Graph.prRound(st.copy(n = Graph.RankBroadcastMaxNodes + 1), st.ranks0)
     assert(countOp(large, "Join") == 1, plan(large))
     assert(countOp(large, "Exchange hashpartitioning") <= 2,
       s"large-graph round shuffles more than the rank table + contrib agg:\n${plan(large)}")
+    // the seeded round personalizedPageRank runs, on a graph with dangling
+    // nodes (3 and 4 have no out-edge): the seed teleport tp rides the
+    // zeros rows like outdeg, so the round keeps its one broadcast rank
+    // join and one wide shuffle, and the dangling mass is a 1-row
+    // aggregate broadcast into the round by a crossJoin
+    val de = Seq((1L, 3L), (1L, 4L), (2L, 4L)).toDF("src", "dst")
+    val pst = Graph.rankSetup(de, Some(Seq(1L).toDF("node")), 0.85)
+    assert(pst.dangling.isDefined && pst.zeros.columns.contains("tp"))
+    val seeded = Graph.prRound(pst, pst.ranks0)
+    assert(countOp(seeded, "BroadcastHashJoin [src") == 1,
+      s"seeded round must broadcast the rank table onto the edges:\n${plan(seeded)}")
+    assert(countOp(seeded, "Exchange hashpartitioning") == 1,
+      s"seeded round must have exactly ONE wide shuffle:\n${plan(seeded)}")
+    assert(countOp(seeded, "BroadcastNestedLoopJoin") == 1 &&
+      countOp(seeded, "BroadcastNestedLoopJoin BuildRight, Cross") == 1,
+      s"dangling share must be a broadcast crossJoin:\n${plan(seeded)}")
   }
 
   test("connectedComponents round: broadcast label join + ONE wide shuffle") {
