@@ -9,9 +9,9 @@ cd "$(dirname "$0")/.."
 sbt -batch test 2>&1 | tail -3
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -1
 python3 scripts/check.py /root/testdata/sf0.001 /tmp/gate_sf0001 | tail -1
-SPARK_GRAFT_CPUS=7 sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_p7" >/dev/null 2>&1
+SPARK_GRAFT_CPUS=7 sbt --batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_p7" >/dev/null 2>&1
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/gate_p7 --no-run | tail -1
-sbt -client "runMain graft.Dev smoke" 2>&1 | grep -F '[smoke] ALL OK'
+sbt --batch "runMain graft.Dev smoke" 2>&1 | grep -F '[smoke] ALL OK'
 # Bench regression table (advisory): if a fresh sweep was taken into
 # bench_out_new.json, diff it against the committed previous-round
 # bench_out.json and flag >1.5x warm-time regressions. Skipped when no

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   * - `nanosAsLong`: INT64 TIMESTAMP(NANOS) event files read as a long, which
   *   `Bars.decodeTs` truncates to µs for both `Bars.readEvents` and
   *   `Streams.readEventStreamFrom`.
-  * - RocksDB state store: `transformWithState` (`Streams.pipelineDedupRsi`)
-  *   runs on no other provider, and state stays off the heap.
+  * - RocksDB state store: `transformWithState` (`Streams.OrderedFold`, the
+  *   streaming recurrences) runs on no other provider, and state stays off
+  *   the heap.
   * - `file://` through [[graft.source.LocalFs]]: no shell process per
   *   created file, mkdir or rename.
   * - `hugeMethodLimit=8000`, HotSpot's huge-method limit (the value Spark's

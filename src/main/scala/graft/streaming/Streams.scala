@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (north star: the reference's batched REST
@@ -12,7 +13,12 @@ import org.apache.spark.sql.types._
   *  - file-source ingestion of event parquet with the ns-timestamp
   *    normalization the batch source applies;
   *  - watermarked tumbling-window aggregation (late data dropped after 1h);
-  *  - stateful gap-sessionization via flatMapGroupsWithState.
+  *  - the bar recurrences (RSI, CUSUM, burst, Holt, GARCH, supertrend,
+  *    PSAR) as per-key state, all through the one transformWithState
+  *    processor [[OrderedFold]], so each agrees with its batch window
+  *    expression row for row;
+  *  - stateful gap-sessionization via flatMapGroupsWithState (one twin
+  *    on event-time timeouts, one in Update mode).
   *
   * Streaming output is checked by StreamingSpec against the equivalent batch
   * queries (same totals), not by the DuckDB oracle.
@@ -234,8 +240,57 @@ object Streams {
       .select(col("user_id"), col("purchase_id"), col("error_id"))
   }
 
+  /** Event time in µs at full precision: `getTime` alone truncates to ms,
+    * which would disagree with the batch twins' unix_micros order and gap
+    * arithmetic. */
+  private def micros(ts: java.sql.Timestamp): Long =
+    (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
+
+  /** A stream row carrying the (ts, event_id) order every batch twin's
+    * window sorts by. */
+  private[streaming] trait Stamped { def ts: java.sql.Timestamp; def event_id: Long }
+
+  /** The one stateful operator behind every streaming recurrence twin, a
+    * per-key ordered fold: sort the key's micro-batch rows by (event µs,
+    * event_id), fold them through `step` from the stored state, and store
+    * the last state — one state read and one write per key per micro-batch.
+    * It runs after another stateful operator in the same query
+    * ([[pipelineDedupRsi]] runs it after the watermark dedup) and keeps its
+    * state in RocksDB.
+    *
+    * Ordering contract: state carries across batches, assuming batch
+    * boundaries respect event order (true for file sources replaying history
+    * in order). A production variant facing out-of-order arrivals would
+    * buffer rows in state until the event-time watermark closes, then fold
+    * them in order. */
+  private[streaming] class OrderedFold[K, R <: Stamped, S, O](zero: S, stateEncoder: Encoder[S],
+      step: (K, S, R) => (S, Option[O])) extends StatefulProcessor[K, R, O] {
+    @transient private var state: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S]("fold", stateEncoder, TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[R],
+        timers: TimerValues): Iterator[O] = {
+      var s = Option(state.get()).getOrElse(zero)
+      val out = rows.toSeq.sortBy(r => (micros(r.ts), r.event_id)).flatMap { r =>
+        val (next, o) = step(key, s, r)
+        s = next
+        o
+      }
+      state.update(s)
+      out.iterator
+    }
+  }
+
+  private def orderedFold[K, R <: Stamped, S: Encoder, O: Encoder](
+      rows: KeyValueGroupedDataset[K, R], zero: S)(
+      step: (K, S, R) => (S, Option[O])): Dataset[O] =
+    rows.transformWithState(new OrderedFold(zero, implicitly[Encoder[S]], step),
+      TimeMode.None(), OutputMode.Append())
+
   case class BarTick(symbol: String, event_id: Long, ts: java.sql.Timestamp,
-    close: Double)
+    close: Double) extends Stamped
   case class RsiPoint(symbol: String, event_id: Long, rsi: Option[Double])
   /** Per-symbol RSI recurrence state: previous close + the adjust=false
     * EWMA accumulators for average gain/loss (`seen` mirrors the window
@@ -248,49 +303,30 @@ object Streams {
     * reference src/features/engineering.py:36-47) carried as per-symbol
     * state — bit-identical arithmetic to the Catalyst Ewma window
     * expression, so streaming and batch agree exactly, row for row.
-    *
-    * Ordering: events are sorted by (ts, event_id) within each micro-batch;
-    * state carries across batches, assuming batch boundaries respect event
-    * order (true for file sources replaying history in order). A
-    * production variant facing out-of-order arrivals would buffer rows in
-    * state until the event-time watermark closes, then fold them in order.
-    */
+    * Ordering contract as [[OrderedFold]]. */
   def streamingRsi(ticks: Dataset[BarTick],
       period: Int = graft.Params.RsiPeriod): Dataset[RsiPoint] = {
     import ticks.sparkSession.implicits._
     val alpha = 2.0 / (period + 1.0)
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[RsiState, RsiPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[RsiState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(
-            RsiState(hasPrev = false, 0.0, gSeen = false, 0.0, lSeen = false, 0.0))
-          val out = sorted.map { e =>
-            val rsi: Option[Double] =
-              if (!st.hasPrev) {
-                // first tick: delta is null -> gain/loss null -> EWMA state
-                // untouched -> rsi null (matches the leading-null window row)
-                st = st.copy(hasPrev = true, prevClose = e.close)
-                None
-              } else {
-                val delta = e.close - st.prevClose
-                val gain = if (delta > 0) delta else 0.0
-                val loss = if (delta < 0) -delta else 0.0
-                val ag = if (!st.gSeen) gain else st.avgGain * (1.0 - alpha) + alpha * gain
-                val al = if (!st.lSeen) loss else st.avgLoss * (1.0 - alpha) + alpha * loss
-                st = RsiState(hasPrev = true, e.close,
-                  gSeen = true, ag, lSeen = true, al)
-                val rs = ag / (al + 1e-10)
-                Some(100.0 - 100.0 / (1.0 + rs))
-              }
-            RsiPoint(sym, e.event_id, rsi)
-          }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(ticks.groupByKey(_.symbol),
+        RsiState(hasPrev = false, 0.0, gSeen = false, 0.0, lSeen = false, 0.0)) {
+      (sym, st, e) =>
+        if (!st.hasPrev)
+          // first tick: delta is null -> gain/loss null -> EWMA state
+          // untouched -> rsi null (matches the leading-null window row)
+          (st.copy(hasPrev = true, prevClose = e.close),
+            Some(RsiPoint(sym, e.event_id, None)))
+        else {
+          val delta = e.close - st.prevClose
+          val gain = if (delta > 0) delta else 0.0
+          val loss = if (delta < 0) -delta else 0.0
+          val ag = if (!st.gSeen) gain else st.avgGain * (1.0 - alpha) + alpha * gain
+          val al = if (!st.lSeen) loss else st.avgLoss * (1.0 - alpha) + alpha * loss
+          val rs = ag / (al + 1e-10)
+          (RsiState(hasPrev = true, e.close, gSeen = true, ag, lSeen = true, al),
+            Some(RsiPoint(sym, e.event_id, Some(100.0 - 100.0 / (1.0 + rs)))))
+        }
+    }
   }
 
   case class CusumPoint(symbol: String, event_id: Long,
@@ -306,40 +342,26 @@ object Streams {
     * of the Catalyst expression, so streaming and batch agree bit-for-bit
     * row for row. The first tick per symbol emits nothing (the batch query
     * filters the null-diff row), matching the batch row set exactly.
-    * Ordering contract as [[streamingRsi]]. */
+    * Ordering contract as [[OrderedFold]]. */
   def streamingCusum(ticks: Dataset[BarTick],
       drift: Double = graft.Params.CusumDrift,
       threshold: Double = graft.Params.CusumThreshold): Dataset[CusumPoint] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[CusumState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(
-            CusumState(hasPrev = false, 0.0, 0.0, 0.0))
-          val out = sorted.flatMap { e =>
-            if (!st.hasPrev) {
-              st = st.copy(hasPrev = true, prevClose = e.close)
-              None
-            } else {
-              val x = e.close - st.prevClose
-              val su = math.max(0.0, st.sUp + (x - drift))
-              val sd = math.max(0.0, st.sDown + (-x - drift))
-              st = CusumState(hasPrev = true, e.close, su, sd)
-              Some(CusumPoint(sym, e.event_id, su, sd,
-                su > threshold, sd > threshold))
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(ticks.groupByKey(_.symbol), CusumState(hasPrev = false, 0.0, 0.0, 0.0)) {
+      (sym, st, e) =>
+        if (!st.hasPrev) (st.copy(hasPrev = true, prevClose = e.close), None)
+        else {
+          val x = e.close - st.prevClose
+          val su = math.max(0.0, st.sUp + (x - drift))
+          val sd = math.max(0.0, st.sDown + (-x - drift))
+          (CusumState(hasPrev = true, e.close, su, sd),
+            Some(CusumPoint(sym, e.event_id, su, sd, su > threshold, sd > threshold)))
+        }
+    }
   }
 
   case class UserEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long,
-      lam: Double)
+      lam: Double) extends Stamped
   case class BurstPoint(user_id: Long, event_id: Long,
       cost0: Double, cost1: Double, burst: Boolean)
   case class BurstState(hasPrev: Boolean, prevUs: Long, c0: Double, c1: Double)
@@ -366,7 +388,7 @@ object Streams {
     * in the exact association order of the Catalyst expression, so
     * streaming and batch agree bit-for-bit row for row; each user's first
     * event emits nothing (the batch row is NULL there). Ordering contract
-    * as [[streamingRsi]]. */
+    * as [[OrderedFold]]. */
   def streamingBurst(events: DataFrame, rates: DataFrame,
       ratio: Double = graft.Params.BurstRateRatio,
       gamma: Double = graft.Params.BurstGamma): Dataset[BurstPoint] = {
@@ -376,34 +398,20 @@ object Streams {
       .join(rates, "user_id")
       .select(col("user_id"), col("ts"), col("event_id"), col("lam"))
       .as[UserEvent]
-    src.groupByKey(_.user_id)
-      .flatMapGroupsWithState[BurstState, BurstPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[BurstState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(
-            BurstState(hasPrev = false, 0L, 0.0, gamma))
-          val out = sorted.flatMap { e =>
-            val us = micros(e.ts)
-            if (!st.hasPrev) {
-              st = st.copy(hasPrev = true, prevUs = us)
-              None
-            } else {
-              val x = (us - st.prevUs).toDouble
-              val t0 = math.min(st.c0, st.c1 + gamma) + e.lam * x
-              val t1 = math.min(st.c1, st.c0 + gamma) +
-                (ratio * e.lam * x - lnS)
-              val m = math.min(t0, t1)
-              st = BurstState(hasPrev = true, us, t0 - m, t1 - m)
-              Some(BurstPoint(uid, e.event_id, t0 - m, t1 - m,
-                (t1 - m) < (t0 - m)))
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(src.groupByKey(_.user_id), BurstState(hasPrev = false, 0L, 0.0, gamma)) {
+      (uid, st, e) =>
+        val us = micros(e.ts)
+        if (!st.hasPrev) (st.copy(hasPrev = true, prevUs = us), None)
+        else {
+          val x = (us - st.prevUs).toDouble
+          val t0 = math.min(st.c0, st.c1 + gamma) + e.lam * x
+          val t1 = math.min(st.c1, st.c0 + gamma) +
+            (ratio * e.lam * x - lnS)
+          val m = math.min(t0, t1)
+          (BurstState(hasPrev = true, us, t0 - m, t1 - m),
+            Some(BurstPoint(uid, e.event_id, t0 - m, t1 - m, (t1 - m) < (t0 - m))))
+        }
+    }
   }
 
   case class HoltPoint(symbol: String, event_id: Long,
@@ -415,31 +423,22 @@ object Streams {
     * arithmetic in the identical order, so streaming == batch bit-for-bit),
     * carried across micro-batches in two doubles of state per symbol. The
     * live forecaster a monitoring pipeline runs against the same definition
-    * its backfill used. */
+    * its backfill used. Ordering contract as [[OrderedFold]]. */
   def streamingHolt(ticks: Dataset[BarTick],
       alpha: Double = graft.Params.HoltAlpha,
       beta: Double = graft.Params.HoltBeta): Dataset[HoltPoint] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[HoltState, HoltPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[HoltState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(HoltState(started = false, 0.0, 0.0))
-          val out = sorted.map { e =>
-            if (!st.started) st = HoltState(started = true, e.close, 0.0)
-            else {
-              val nl = alpha * e.close + (1.0 - alpha) * (st.l + st.b)
-              val nb = beta * (nl - st.l) + (1.0 - beta) * st.b
-              st = HoltState(started = true, nl, nb)
-            }
-            HoltPoint(sym, e.event_id, st.l, st.b)
+    orderedFold(ticks.groupByKey(_.symbol), HoltState(started = false, 0.0, 0.0)) {
+      (sym, st, e) =>
+        val next =
+          if (!st.started) HoltState(started = true, e.close, 0.0)
+          else {
+            val nl = alpha * e.close + (1.0 - alpha) * (st.l + st.b)
+            val nb = beta * (nl - st.l) + (1.0 - beta) * st.b
+            HoltState(started = true, nl, nb)
           }
-          state.update(st)
-          out.iterator
-      }
+        (next, Some(HoltPoint(sym, e.event_id, next.l, next.b)))
+    }
   }
 
   case class GarchPoint(symbol: String, event_id: Long,
@@ -456,40 +455,29 @@ object Streams {
     * output, exactly like the batch's null x), seeded at the
     * unconditional variance. Every double comes from the same JVM ops in
     * the same order, so streaming == batch row for row. Ordering contract
-    * as [[streamingRsi]]. */
+    * as [[OrderedFold]]. */
   def streamingGarch(ticks: Dataset[BarTick],
       omega: Double = graft.features.Market.GarchOmega,
       alpha: Double = graft.features.Market.GarchAlpha,
       beta: Double = graft.features.Market.GarchBeta): Dataset[GarchPoint] = {
     import ticks.sparkSession.implicits._
     val base = omega / (1.0 - alpha - beta)
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[GarchState, GarchPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[GarchState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(
-            GarchState(hasPrev = false, 0.0, hasPrevRet = false, 0.0, base))
-          val out = sorted.map { e =>
-            val point: (Option[Double], Option[Double]) =
-              if (st.hasPrevRet) {
-                val x = st.prevRet * st.prevRet
-                st = st.copy(v = omega + alpha * x + beta * st.v)
-                (Some(st.v), Some(math.sqrt(st.v)))
-              } else (None, None)
-            val retOpt =
-              if (st.hasPrev && st.prevClose != 0.0)
-                Some((e.close - st.prevClose) / st.prevClose)
-              else None
-            st = st.copy(hasPrev = true, prevClose = e.close,
-              hasPrevRet = retOpt.isDefined, prevRet = retOpt.getOrElse(0.0))
-            GarchPoint(sym, e.event_id, point._1, point._2)
-          }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(ticks.groupByKey(_.symbol),
+        GarchState(hasPrev = false, 0.0, hasPrevRet = false, 0.0, base)) {
+      (sym, st, e) =>
+        val v =
+          if (st.hasPrevRet) {
+            val x = st.prevRet * st.prevRet
+            Some(omega + alpha * x + beta * st.v)
+          } else None
+        val ret =
+          if (st.hasPrev && st.prevClose != 0.0)
+            Some((e.close - st.prevClose) / st.prevClose)
+          else None
+        (GarchState(hasPrev = true, e.close, ret.isDefined, ret.getOrElse(0.0),
+            v.getOrElse(st.v)),
+          Some(GarchPoint(sym, e.event_id, v, v.map(math.sqrt))))
+    }
   }
 
   case class SupertrendPoint(symbol: String, event_id: Long,
@@ -510,65 +498,54 @@ object Streams {
     * band-ratchet + regime recursion — every double computed by the same
     * JVM ops in the same order, so streaming == batch row for row.
     * Emits a point per tick (None through the ATR warmup, matching the
-    * batch nulls). Ordering contract as [[streamingRsi]]. */
+    * batch nulls). Ordering contract as [[OrderedFold]]. */
   def streamingSupertrend(ticks: Dataset[BarTick],
       n: Int = graft.Params.SupertrendAtr,
       m: Double = graft.Params.SupertrendMult): Dataset[SupertrendPoint] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[SupertrendState, SupertrendPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[SupertrendState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(SupertrendState(
-            hasPrev = false, 0.0, 0.0, Vector.empty, started = false,
-            0.0, 0.0, 0.0))
-          val out = sorted.map { e =>
-            val open = if (st.hasPrev) st.prevClose else e.close
-            val high = math.max(open, e.close)
-            val low = math.min(open, e.close)
-            val tr =
-              if (!st.hasPrev) high - low
-              else math.max(high - low, math.max(
-                math.abs(high - st.prevClose), math.abs(low - st.prevClose)))
-            val cum = st.cum + tr
-            val cums = st.cums :+ cum
-            // cum_{t−n} exists once the FIFO holds n+1 entries; until row n
-            // the batch lag coalesces to 0.0
-            val (base, trimmed) =
-              if (cums.length == n + 1) (cums.head, cums.tail)
-              else (0.0, cums)
-            val atrReady = cums.length >= n
-            val point: (Option[Double], Option[Int]) =
-              if (!atrReady) (None, None)
-              else {
-                val atr = (cum - base) / n
-                val hl2 = (high + low) / 2.0
-                val ub = hl2 + m * atr
-                val lb = hl2 - m * atr
-                if (!st.started) {
-                  st = st.copy(started = true, fub = ub, flb = lb, trend = 1.0)
-                } else {
-                  val pc = st.prevClose
-                  val nfub = if (ub < st.fub || pc > st.fub) ub else st.fub
-                  val nflb = if (lb > st.flb || pc < st.flb) lb else st.flb
-                  val ntrend =
-                    if (st.trend == 1.0) { if (e.close < nflb) -1.0 else 1.0 }
-                    else { if (e.close > nfub) 1.0 else -1.0 }
-                  st = st.copy(fub = nfub, flb = nflb, trend = ntrend)
-                }
-                (Some(if (st.trend == 1.0) st.flb else st.fub),
-                  Some(st.trend.toInt))
-              }
-            st = st.copy(hasPrev = true, prevClose = e.close,
-              cum = cum, cums = trimmed)
-            SupertrendPoint(sym, e.event_id, point._1, point._2)
+    orderedFold(ticks.groupByKey(_.symbol), SupertrendState(
+        hasPrev = false, 0.0, 0.0, Vector.empty, started = false, 0.0, 0.0, 0.0)) {
+      (sym, st, e) =>
+        val open = if (st.hasPrev) st.prevClose else e.close
+        val high = math.max(open, e.close)
+        val low = math.min(open, e.close)
+        val tr =
+          if (!st.hasPrev) high - low
+          else math.max(high - low, math.max(
+            math.abs(high - st.prevClose), math.abs(low - st.prevClose)))
+        val cum = st.cum + tr
+        val cums = st.cums :+ cum
+        // cum_{t−n} exists once the FIFO holds n+1 entries; until row n
+        // the batch lag coalesces to 0.0
+        val (base, trimmed) =
+          if (cums.length == n + 1) (cums.head, cums.tail)
+          else (0.0, cums)
+        // (final upper band, final lower band, regime) once the ATR is ready
+        val bands =
+          if (cums.length < n) None
+          else {
+            val atr = (cum - base) / n
+            val hl2 = (high + low) / 2.0
+            val ub = hl2 + m * atr
+            val lb = hl2 - m * atr
+            if (!st.started) Some((ub, lb, 1.0))
+            else {
+              val pc = st.prevClose
+              val nfub = if (ub < st.fub || pc > st.fub) ub else st.fub
+              val nflb = if (lb > st.flb || pc < st.flb) lb else st.flb
+              val ntrend =
+                if (st.trend == 1.0) { if (e.close < nflb) -1.0 else 1.0 }
+                else { if (e.close > nfub) 1.0 else -1.0 }
+              Some((nfub, nflb, ntrend))
+            }
           }
-          state.update(st)
-          out.iterator
-      }
+        val (fub, flb, trend) = bands.getOrElse((st.fub, st.flb, st.trend))
+        (SupertrendState(hasPrev = true, e.close, cum, trimmed,
+            started = st.started || bands.isDefined, fub, flb, trend),
+          Some(SupertrendPoint(sym, e.event_id,
+            bands.map(_ => if (trend == 1.0) flb else fub),
+            bands.map(_ => trend.toInt))))
+    }
   }
 
   case class PsarPoint(symbol: String, event_id: Long,
@@ -581,48 +558,38 @@ object Streams {
     * adapter, then the identical Wilder recursion per symbol (flip checked
     * before new-extreme, same JVM doubles in the same order), so streaming
     * == batch row for row from the very first tick (PSAR has no warmup).
-    * Ordering contract as [[streamingRsi]]. */
+    * Ordering contract as [[OrderedFold]]. */
   def streamingPsar(ticks: Dataset[BarTick],
       af0: Double = graft.Params.PsarAf0,
       inc: Double = graft.Params.PsarInc,
       afMax: Double = graft.Params.PsarAfMax): Dataset[PsarPoint] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[PsarState, PsarPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sym, it, state: GroupState[PsarState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(PsarState(
-            hasPrev = false, 0.0, started = false, 0.0, 0.0, 0.0, 0.0))
-          val out = sorted.map { e =>
-            val open = if (st.hasPrev) st.prevClose else e.close
-            val h = math.max(open, e.close)
-            val l = math.min(open, e.close)
-            if (!st.started)
-              st = st.copy(started = true, sar = l, ep = h, af = af0, tr = 1.0)
-            else {
-              val sp = st.sar + st.af * (st.ep - st.sar)
-              val flip = (st.tr == 1.0 && l < sp) || (st.tr != 1.0 && h > sp)
-              val newext = (st.tr == 1.0 && h > st.ep) ||
-                (st.tr != 1.0 && l < st.ep)
-              val nsar = if (flip) st.ep else sp
-              val nep =
-                if (flip) { if (st.tr == 1.0) l else h }
-                else if (newext) { if (st.tr == 1.0) h else l }
-                else st.ep
-              val naf = if (flip) af0
-                else if (newext) math.min(st.af + inc, afMax) else st.af
-              val ntr = if (flip) { if (st.tr == 1.0) -1.0 else 1.0 } else st.tr
-              st = st.copy(sar = nsar, ep = nep, af = naf, tr = ntr)
-            }
-            st = st.copy(hasPrev = true, prevClose = e.close)
-            PsarPoint(sym, e.event_id, st.sar, st.tr.toInt)
+    orderedFold(ticks.groupByKey(_.symbol), PsarState(
+        hasPrev = false, 0.0, started = false, 0.0, 0.0, 0.0, 0.0)) {
+      (sym, st, e) =>
+        val open = if (st.hasPrev) st.prevClose else e.close
+        val h = math.max(open, e.close)
+        val l = math.min(open, e.close)
+        val next =
+          if (!st.started) st.copy(started = true, sar = l, ep = h, af = af0, tr = 1.0)
+          else {
+            val sp = st.sar + st.af * (st.ep - st.sar)
+            val flip = (st.tr == 1.0 && l < sp) || (st.tr != 1.0 && h > sp)
+            val newext = (st.tr == 1.0 && h > st.ep) ||
+              (st.tr != 1.0 && l < st.ep)
+            val nsar = if (flip) st.ep else sp
+            val nep =
+              if (flip) { if (st.tr == 1.0) l else h }
+              else if (newext) { if (st.tr == 1.0) h else l }
+              else st.ep
+            val naf = if (flip) af0
+              else if (newext) math.min(st.af + inc, afMax) else st.af
+            val ntr = if (flip) { if (st.tr == 1.0) -1.0 else 1.0 } else st.tr
+            st.copy(sar = nsar, ep = nep, af = naf, tr = ntr)
           }
-          state.update(st)
-          out.iterator
-      }
+        (next.copy(hasPrev = true, prevClose = e.close),
+          Some(PsarPoint(sym, e.event_id, next.sar, next.tr.toInt)))
+    }
   }
 
   /** Deterministic symbol → sector dimension: the small static side of the
@@ -936,20 +903,6 @@ object Streams {
       col("event_id"), col("ts"), col("value").as("close")).as[BarTick]
   }
 
-  /** Stateful gap-sessionization: per user, cumulative session/event
-    * counts split on >30 min gaps, exact under ANY within-watermark
-    * arrival order (the span-merge core is order-insensitive, so no
-    * per-batch sort is needed and cross-batch stragglers — including ones
-    * that bridge two provisional sessions — land exactly as the batch
-    * twin's global sort would). Beyond-watermark stragglers are DROPPED
-    * by hand inside the group function (NoTimeout means Spark does not
-    * pre-drop them the way it does for streamingSessionize's
-    * EventTimeTimeout; without the filter a too-late event would re-open
-    * a span already folded into the counters and over-count), so both
-    * functions see the identical admitted-row set. Watermark-final spans
-    * fold into counters, bounding state by the watermark horizon.
-    * [[streamingSessionize]] is the per-session variant: event-time
-    * timeout emits each closed session incrementally. */
   /** Streaming twin of the batch [[graft.analytics.Relational.sessionize]]:
     * per user, gap-split sessions emitted as CLOSED rows in Append mode.
     *
@@ -978,8 +931,6 @@ object Streams {
       .flatMapGroupsWithState[SessSpansState, SessionRow](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case (uid, it, state: GroupState[SessSpansState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
           def toTs(us: Long): java.sql.Timestamp = {
             val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
             t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
@@ -1015,6 +966,20 @@ object Streams {
       }
   }
 
+  /** Stateful gap-sessionization: per user, cumulative session/event
+    * counts split on >30 min gaps, exact under ANY within-watermark
+    * arrival order (the span-merge core is order-insensitive, so no
+    * per-batch sort is needed and cross-batch stragglers — including ones
+    * that bridge two provisional sessions — land exactly as the batch
+    * twin's global sort would). Beyond-watermark stragglers are DROPPED
+    * by hand inside the group function (NoTimeout means Spark does not
+    * pre-drop them the way it does for streamingSessionize's
+    * EventTimeTimeout; without the filter a too-late event would re-open
+    * a span already folded into the counters and over-count), so both
+    * functions see the identical admitted-row set. Watermark-final spans
+    * fold into counters, bounding state by the watermark horizon.
+    * [[streamingSessionize]] is the per-session variant: event-time
+    * timeout emits each closed session incrementally. */
   def sessionCounts(events: DataFrame, gapMinutes: Int = 30,
       watermark: String = "1 hour"): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
@@ -1025,10 +990,6 @@ object Streams {
       .flatMapGroupsWithState[SessCountState, SessionSummary](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         case (uid, it, state: GroupState[SessCountState]) =>
-          // full µs precision: getTime() alone truncates to ms, which would
-          // disagree with the batch twin's unix_micros gap arithmetic
-          def micros(ts: java.sql.Timestamp): Long =
-            (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
           var st = state.getOption.getOrElse(SessCountState(Nil, 0L, 0L))
           var spans = st.spans.toList
           // Spark pre-drops beyond-watermark input ONLY under
@@ -1057,64 +1018,13 @@ object Streams {
       }
   }
 
-  /** Per-symbol RSI recurrence as a Spark 4 [[org.apache.spark.sql
-    * .streaming.StatefulProcessor]] — the transformWithState twin of
-    * [[streamingRsi]]. Why a second API for the same recurrence:
-    * flatMapGroupsWithState must be the ONLY stateful operator in its
-    * query, so the north-star ingestion chain (watermark dedup → featurize
-    * → sink in ONE query) is inexpressible with it; transformWithState
-    * COMPOSES with other stateful operators (and runs on the RocksDB state
-    * store, the 100-TB-cluster state backend). The fold is streamingRsi's
-    * arithmetic verbatim, so batch window expression, FMGWS, and TWS agree
-    * bit-for-bit — StreamingSpec proves the whole chain against the batch
-    * pipeline, including a mid-stream checkpoint restart. */
-  class RsiProcessor(period: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, BarTick, RsiPoint] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[RsiState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[RsiState]("rsi",
-        org.apache.spark.sql.Encoders.product[RsiState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[BarTick],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[RsiPoint] = {
-      val alpha = 2.0 / (period + 1.0)
-      def micros(ts: java.sql.Timestamp): Long =
-        (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var s = Option(st.get()).getOrElse(
-        RsiState(hasPrev = false, 0.0, gSeen = false, 0.0, lSeen = false, 0.0))
-      val out = sorted.map { e =>
-        val rsi: Option[Double] =
-          if (!s.hasPrev) {
-            s = s.copy(hasPrev = true, prevClose = e.close)
-            None
-          } else {
-            val delta = e.close - s.prevClose
-            val gain = if (delta > 0) delta else 0.0
-            val loss = if (delta < 0) -delta else 0.0
-            val ag = if (!s.gSeen) gain else s.avgGain * (1.0 - alpha) + alpha * gain
-            val al = if (!s.lSeen) loss else s.avgLoss * (1.0 - alpha) + alpha * loss
-            s = RsiState(hasPrev = true, e.close, gSeen = true, ag, lSeen = true, al)
-            val rs = ag / (al + 1e-10)
-            Some(100.0 - 100.0 / (1.0 + rs))
-          }
-        RsiPoint(key, e.event_id, rsi)
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-
   /** End-to-end streaming ingestion pipeline — the north star (Structured
     * Streaming ingestion + DataFrame transformations) composed in ONE
     * query: ingest → within-watermark exact dedup (redelivered ticks
     * dropped while their original's state lives, the
     * [[streamingDedupExact]] contract) → per-symbol RSI recurrence
-    * ([[RsiProcessor]] via transformWithState — the API that legally
-    * follows another stateful operator) → caller sinks with
+    * ([[streamingRsi]], an [[OrderedFold]] on transformWithState, in the
+    * same query after the dedup) → caller sinks with
     * [[sinkUpsert]] for idempotent CDC merge. Input: (symbol, event_id,
     * ts, close) rows with event-time `ts`.
     *
@@ -1123,21 +1033,15 @@ object Streams {
     * dedup's digest exchange and the groupByKey(symbol) exchange — both
     * would hash-partition across a 1000-executor cluster with no global
     * ordering requirement (per-symbol order is restored inside the
-    * processor per micro-batch). */
+    * fold per micro-batch). */
   def pipelineDedupRsi(raw: DataFrame, watermark: String = "1 hour"): DataFrame = {
-    val session = raw.sparkSession
-    import session.implicits._
+    import raw.sparkSession.implicits._
     val deduped = raw
       .withWatermark("ts", watermark)
       .withColumn("norm_md5",
         md5(concat_ws(":", col("symbol"), col("event_id"), col("close"))))
       .dropDuplicatesWithinWatermark("norm_md5")
-    deduped.select(col("symbol"), col("event_id"), col("ts"), col("close"))
-      .as[BarTick]
-      .groupByKey(_.symbol)
-      .transformWithState(new RsiProcessor(graft.Params.RsiPeriod),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .toDF()
+    streamingRsi(deduped.select(col("symbol"), col("event_id"), col("ts"), col("close"))
+      .as[BarTick]).toDF()
   }
 }

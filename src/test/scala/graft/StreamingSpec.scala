@@ -42,6 +42,68 @@ class StreamingSpec extends SparkSpec {
     splitDir
   }
 
+  /** `got` (event_id, rsi) equals the batch RSI pipeline's column row for
+    * row, down to the raw bits of every double. */
+  private def assertRsiBits(got: org.apache.spark.sql.DataFrame): Unit = {
+    val want = graft.features.Technical.withTechnical(
+        graft.source.Bars.bars(spark, dir))
+      .select(col("event_id"), col("rsi"))
+    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
+      .select(col("event_id"), col("g.rsi").as("g_rsi"), col("w.rsi").as("w_rsi"))
+      .collect()
+    assert(joined.length == 1000)
+    joined.foreach { r =>
+      val (g, w) = (Option(r.get(1)).map(_.asInstanceOf[Double]),
+        Option(r.get(2)).map(_.asInstanceOf[Double]))
+      assert(g.isDefined == w.isDefined, s"null mismatch at ${r.get(0)}: $g vs $w")
+      g.zip(w).foreach { case (a, b) =>
+        assert(java.lang.Double.doubleToRawLongBits(a) ==
+          java.lang.Double.doubleToRawLongBits(b), s"rsi mismatch at ${r.get(0)}: $a vs $b")
+      }
+    }
+  }
+
+  /** `got` (a [[Streams.streamingBurst]] output) equals the batch
+    * events_burst on its non-null rows. */
+  private def assertBurstMatchesBatch(got: org.apache.spark.sql.DataFrame): Unit = {
+    // batch side r6-rounds at the output boundary; first-event rows are
+    // NULL there and absent from the stream — compare the non-null set
+    val want = graft.queries.Analytics.eventsBurst(spark, dir)
+      .filter(col("burst").isNotNull)
+    assert(got.count() == want.count(),
+      s"row sets differ: ${got.count()} vs ${want.count()}")
+    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
+      .select(col("g.cost0"), col("w.cost0"),
+        col("g.cost1"), col("w.cost1"),
+        col("g.burst"), col("w.burst"))
+      .collect()
+    joined.foreach { r =>
+      assert(!r.anyNull, s"row set mismatch: $r")
+      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
+        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"costs diverge: $r")
+      assert((r.getBoolean(4)) == (r.getInt(5) == 1), s"flags diverge: $r")
+    }
+  }
+
+  /** `got` (a [[Streams.streamingHolt]] output) equals the batch
+    * window_holt row for row. */
+  private def assertHoltMatchesBatch(got: org.apache.spark.sql.DataFrame): Unit = {
+    val want = graft.queries.Analytics.windowHolt(spark, dir)
+    assert(got.count() == want.count(),
+      s"row sets differ: ${got.count()} vs ${want.count()}")
+    // batch output is r6-rounded at the query boundary; compare at that
+    // granularity (same contract as the CUSUM parity test)
+    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
+      .select(col("g.level"), col("w.holt_level"),
+        col("g.trend"), col("w.holt_trend"))
+      .collect()
+    joined.foreach { r =>
+      assert(!r.anyNull, s"row set mismatch: $r")
+      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
+        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"holt mismatch: $r")
+    }
+  }
+
   test("streaming tumbling window counts equal the batch window aggregation") {
     val stream = Streams.tumblingCounts(Streams.readEventStream(spark, dir))
     val q = stream.writeStream.format("memory").queryName("stream_tumbling")
@@ -143,22 +205,8 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("stream_rsi")
-    val want = graft.features.Technical.withTechnical(
-        graft.source.Bars.bars(spark, dir))
-      .select(col("event_id"), col("rsi"))
     assert(got.count() == 1000)
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("event_id"), col("g.rsi").as("g_rsi"), col("w.rsi").as("w_rsi"))
-      .collect()
-    assert(joined.length == 1000)
-    joined.foreach { r =>
-      val (g, w) = (Option(r.get(1)).map(_.asInstanceOf[Double]),
-        Option(r.get(2)).map(_.asInstanceOf[Double]))
-      assert(g.isDefined == w.isDefined, s"null mismatch at ${r.get(0)}: $g vs $w")
-      g.zip(w).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"rsi mismatch at ${r.get(0)}: $a vs $b")
-      }
-    }
+    assertRsiBits(got)
   }
 
   test("streaming CUSUM equals the batch window_cusum bit-for-bit") {
@@ -195,24 +243,7 @@ class StreamingSpec extends SparkSpec {
     val q = stream.writeStream.format("memory").queryName("stream_burst")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    val got = spark.table("stream_burst")
-    // batch side r6-rounds at the output boundary; first-event rows are
-    // NULL there and absent from the stream — compare the non-null set
-    val want = graft.queries.Analytics.eventsBurst(spark, dir)
-      .filter(col("burst").isNotNull)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.cost0"), col("w.cost0"),
-        col("g.cost1"), col("w.cost1"),
-        col("g.burst"), col("w.burst"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"costs diverge: $r")
-      assert((r.getBoolean(4)) == (r.getInt(5) == 1), s"flags diverge: $r")
-    }
+    assertBurstMatchesBatch(spark.table("stream_burst"))
   }
 
   test("streaming Holt equals the batch window_holt bit-for-bit") {
@@ -221,21 +252,20 @@ class StreamingSpec extends SparkSpec {
     val q = stream.writeStream.format("memory").queryName("stream_holt")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    val got = spark.table("stream_holt")
-    val want = graft.queries.Analytics.windowHolt(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    // batch output is r6-rounded at the query boundary; compare at that
-    // granularity (same contract as the CUSUM parity test)
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.level"), col("w.holt_level"),
-        col("g.trend"), col("w.holt_trend"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"holt mismatch: $r")
-    }
+    assertHoltMatchesBatch(spark.table("stream_holt"))
+  }
+
+  test("streaming Holt after the watermark dedup, in one query over a duplicated source, equals the batch window_holt") {
+    // transformWithState composes after dropDuplicatesWithinWatermark; the
+    // second copy of every event must be gone before the fold sees it
+    val stream = Streams.streamingHolt(Streams.tickStream(
+      Streams.dedupEvents(Streams.readEventStream(spark, dir, copies = 2))))
+    val q = stream.writeStream.format("memory").queryName("stream_dedup_holt")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    assert(q.lastProgress.stateOperators.length == 2,
+      "expected the dedup and the fold as two stateful operators")
+    assertHoltMatchesBatch(spark.table("stream_dedup_holt"))
   }
 
   test("streaming supertrend equals the batch feat_supertrend row for row") {
@@ -285,28 +315,23 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streaming RSI state carries across micro-batches (time-split files)") {
+  test("streaming RSI and burst state carries across micro-batches (time-split files)") {
     val splitDir = timeSplitDir()
-    val stream = Streams.streamingRsi(Streams.tickStream(
-      Streams.readEventStreamFrom(spark, splitDir.toString, Some(1))))
-    val q = stream.writeStream.format("memory").queryName("stream_rsi_mb")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(180000)
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
-      "expected >= 3 non-empty micro-batches")
-    val got = spark.table("stream_rsi_mb")
-    val want = graft.features.Technical.withTechnical(
-        graft.source.Bars.bars(spark, dir))
-      .select(col("event_id"), col("rsi"))
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.rsi").as("g_rsi"), col("w.rsi").as("w_rsi")).collect()
-    assert(joined.length == 1000)
-    joined.foreach { r =>
-      val (g, w) = (Option(r.get(0)).map(_.asInstanceOf[Double]),
-        Option(r.get(1)).map(_.asInstanceOf[Double]))
-      assert(g.isDefined == w.isDefined && g.zip(w).forall {
-        case (a, b) => math.abs(a - b) < 1e-9 })
+    def replay(name: String, stream: org.apache.spark.sql.Dataset[_]) = {
+      val q = stream.writeStream.format("memory").queryName(name)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(180000)
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
+        s"$name: expected >= 3 non-empty micro-batches")
+      spark.table(name)
     }
+    def events() = Streams.readEventStreamFrom(spark, splitDir.toString, Some(1))
+    // RSI: String-keyed, emits every row
+    assertRsiBits(replay("stream_rsi_mb", Streams.streamingRsi(Streams.tickStream(events()))))
+    // burst: Long-keyed, a user's first event emits nothing
+    val rates = Streams.burstRates(graft.source.Bars.readEvents(spark, dir))
+      .localCheckpoint()
+    assertBurstMatchesBatch(replay("stream_burst_mb", Streams.streamingBurst(events(), rates)))
   }
 
   test("left-outer stream-stream join emits unmatched purchases with null error_id on watermark expiry") {
@@ -897,7 +922,8 @@ class StreamingSpec extends SparkSpec {
       val gv = got(k)
       assert(gv.isDefined == wv.isDefined, s"null mismatch at $k: $gv vs $wv")
       gv.zip(wv).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"rsi mismatch at $k: $a vs $b") }
+        assert(java.lang.Double.doubleToRawLongBits(a) ==
+          java.lang.Double.doubleToRawLongBits(b), s"rsi mismatch at $k: $a vs $b") }
     }
   }
 }
