@@ -15,7 +15,9 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 
 if "--no-run" not in flags:
     r = subprocess.run(
-        ["sbt", "-client", f'runMain graft.Verify {sfdir} {outdir}'],
+        # --batch, not -client: a client boots a background sbt server
+        # that outlives this script
+        ["sbt", "--batch", f'runMain graft.Verify {sfdir} {outdir}'],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), capture_output=True, text=True)
     for line in r.stdout.splitlines():
         if "[verify]" in line or "Exception" in line:

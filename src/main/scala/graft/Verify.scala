@@ -13,10 +13,15 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // Clear the previous run's dump first: a query that throws while its
+      // plan is built never reaches .write, and a stale dump left in place
+      // would be compared as if it were this run's result.
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+      try fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: $e")
+        e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

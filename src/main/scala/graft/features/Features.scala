@@ -18,15 +18,28 @@ import org.apache.spark.sql.functions._
   *      this pass — the reference has the same second pass)
   *   5. pure projection: all feature arithmetic + calendar encodings
   *
-  * 4 WindowExecs over one hashpartitioning(symbol) exchange, vs 8 when the
-  * per-family transforms are chained — same expression trees per output
-  * column (bit-identical results, same oracle), half the buffer passes.
-  * The per-family operators (Technical/Momentum/Volatility/Temporal) remain
-  * the modular API; this is the throughput path for entry()/ml.
+  * 4 WindowExecs over one hashpartitioning(symbol) exchange. This is the
+  * ONLY place the batch RSI/MACD/Bollinger/momentum/volatility formulas
+  * are written: every per-family query (`feat_rsi`, `feat_momentum`, …),
+  * the squeeze flag and the finite-window backfill select their columns
+  * from it, and Catalyst's column pruning drops every window expression
+  * the selection does not reference (a momentum selection plans no EWMA).
+  * The family column lists below are the single naming of each family.
   */
 object Features {
 
   def computeAllFeatures(df: DataFrame): DataFrame = {
+    val s5 = withHelpers(df)
+    // only this pipeline's own helpers: a caller's `_`-column (e.g. the
+    // backfill's `_is_new` marker) passes through
+    val helper = s5.columns.diff(df.columns).filter(_.startsWith("_"))
+    Temporal.withTemporal(s5.drop(helper.toIndexedSeq: _*))
+  }
+
+  /** Passes 1-5 with their `_` helper columns still attached;
+    * [[Incremental.ewmaState]] reads the terminal EWMA means
+    * (`_avg_gain`, `_avg_loss`, `_ema_f`, `_ema_s`) from here. */
+  private[features] def withHelpers(df: DataFrame): DataFrame = {
     val w = Frames.bySymbol
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val close = col("close")
@@ -40,10 +53,7 @@ object Features {
       ewmaSpanOver(c, span, adjust, part, ord)
     def cum(e: Column) = coalesce(sum(e).over(running), lit(0.0))
     def cnt(e: Column) = count(e).over(running)
-    def roll(name: String, n: Int) =
-      col(name) - coalesce(lag(col(name), n).over(w), lit(0.0))
-    def gate(name: String, n: Int) =
-      (col(s"${name}_n") - coalesce(lag(col(s"${name}_n"), n).over(w), lit(0L))) === n
+    import Frames.{cumCountGate => gate, cumRolling => roll}
 
     // 1: row-offset lags
     val delta = close - lag(close, 1).over(w)
@@ -83,7 +93,7 @@ object Features {
     val s4 = s3.withColumn("macd_signal",
       ewm(col("macd"), Params.MacdSignal, adjust = true))
 
-    // 5: pure projection — identical formulas to the per-family operators
+    // 5: pure projection — all feature arithmetic
     val rs = col("_avg_gain") / (col("_avg_loss") + 1e-10)
     val bbMid = when(col("_bg"), col("_bs1") / bbN)
     val bbSd = when(col("_bg"), sqrt(greatest(
@@ -104,7 +114,7 @@ object Features {
         when(col(s"_rg_$n"), col(s"_rq_$n")).as(s"realized_vol_$n"),
         when(col(s"_hg_$n"), col(s"_hs_$n") / n).as(s"hl_range_$n"))
     }
-    val s5 = s4.select(col("*") +: (Seq(
+    s4.select(col("*") +: (Seq(
       (lit(100) - lit(100) / (lit(1) + rs)).as("rsi"),
       (col("macd") - col("macd_signal")).as("macd_histogram"),
       bbMid.as("bb_middle"),
@@ -112,22 +122,25 @@ object Features {
       (bbMid - bbSd * bbK).as("bb_lower"),
       try_divide((bbMid + bbSd * bbK) - (bbMid - bbSd * bbK), bbMid).as("bb_width")) ++
       momCols ++ volCols): _*)
-
-    val helper = s5.columns.filter(_.startsWith("_"))
-    Temporal.withTemporal(s5.drop(helper.toIndexedSeq: _*))
   }
+
+  // Per-family column names, each in its output order.
+  val RsiCols: Seq[String] = Seq("rsi")
+  val MacdCols: Seq[String] = Seq("macd", "macd_signal", "macd_histogram")
+  val BollingerCols: Seq[String] = Seq("bb_middle", "bb_upper", "bb_lower", "bb_width")
+  val MomentumCols: Seq[String] = Params.MomentumPeriods.flatMap(p =>
+    Seq(s"return_$p", s"momentum_$p", s"roc_$p", s"sma_$p", s"distance_sma_$p"))
+  val VolatilityCols: Seq[String] = "returns" +: Params.VolatilityWindows.flatMap(n =>
+    Seq(s"volatility_$n", s"realized_vol_$n", s"hl_range_$n"))
+  /** Calendar fields (long-typed) and their cyclic encodings (doubles). */
+  val CalendarCols: Seq[String] = Seq("hour", "minute", "day_of_week", "day", "month")
+  val CyclicCols: Seq[String] = Seq("hour_sin", "hour_cos",
+    "day_of_week_sin", "day_of_week_cos", "month_sin", "month_cos")
+  val TemporalCols: Seq[String] = CalendarCols ++ CyclicCols
 
   /** The 49 feature column names, mirroring the reference's exclusion rule
     * (src/ml/training.py:39-41: everything except OHLCV/datetime/target). */
   val FeatureCols: Seq[String] =
-    Seq("rsi", "macd", "macd_signal", "macd_histogram",
-      "bb_middle", "bb_upper", "bb_lower", "bb_width") ++
-    Params.MomentumPeriods.flatMap(p =>
-      Seq(s"return_$p", s"momentum_$p", s"roc_$p", s"sma_$p", s"distance_sma_$p")) ++
-    Seq("returns") ++
-    Params.VolatilityWindows.flatMap(n =>
-      Seq(s"volatility_$n", s"realized_vol_$n", s"hl_range_$n")) ++
-    Seq("hour", "minute", "day_of_week", "day", "month",
-      "hour_sin", "hour_cos", "day_of_week_sin", "day_of_week_cos",
-      "month_sin", "month_cos")
+    RsiCols ++ MacdCols ++ BollingerCols ++ MomentumCols ++ VolatilityCols ++
+      TemporalCols
 }

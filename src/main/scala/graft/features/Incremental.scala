@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Incremental backfill of the finite-window feature families.
+/** Incremental backfill of the 49-feature pipeline's families.
   *
   * When a day of bars lands on a 100 TB feature table, recomputing the
   * whole history per symbol is the difference between "process a day" and
@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   * from a different origin, so the window differences agree to relative
   * ~1e-12, not bit-for-bit (PropSpec pins this contract at 1e-9 relative
   * on random splits; null gates and lag-based features match exactly).
+  * The formulas are [[Features.computeAllFeatures]]'s own: [[finiteFeatures]]
+  * is a column selection of it, not a second definition.
   *
   * The EWMA families (RSI, MACD) carry unbounded memory, so their
   * incremental form is stateful rather than tail-windowed: [[ewmaState]]
@@ -37,8 +39,10 @@ import org.apache.spark.sql.functions._
   *    continuation is exact in math, fp-equal at ~1e-13 (pow-form decay vs
   *    the iterated recurrence; PropSpec pins 1e-9).
   *
-  * (The streaming twin [[graft.streaming.Streams.streamingRsi]] carries
-  * the same recurrences across micro-batches.)
+  * This continuation is a different algorithm for the same recurrences,
+  * so PropSpec checks it against [[Features.computeAllFeatures]]. (The
+  * streaming twin [[graft.streaming.Streams.streamingRsi]] carries them
+  * across micro-batches.)
   */
 object Incremental {
 
@@ -55,23 +59,17 @@ object Incremental {
 
   /** The finite-window feature columns [[finiteFeatures]] emits. */
   val FiniteFeatureCols: Seq[String] =
-    Params.MomentumPeriods.flatMap(p => Seq(
-      s"return_$p", s"momentum_$p", s"roc_$p", s"sma_$p", s"distance_sma_$p")) ++
-    ("returns" +: Params.VolatilityWindows.flatMap(n => Seq(
-      s"volatility_$n", s"realized_vol_$n", s"hl_range_$n"))) ++
-    Seq("bb_middle", "bb_upper", "bb_lower", "bb_width") ++
-    Seq("hour", "minute", "day_of_week", "day", "month",
-      "hour_sin", "hour_cos", "day_of_week_sin", "day_of_week_cos",
-      "month_sin", "month_cos")
+    Features.MomentumCols ++ Features.VolatilityCols ++
+      Features.BollingerCols ++ Features.TemporalCols
 
-  /** All finite-window families composed (momentum → volatility →
-    * Bollinger → temporal) — the per-family operators share one
-    * hashpartitioning(symbol) exchange. */
+  /** The finite-window families (momentum, volatility, Bollinger,
+    * calendar): `df`'s columns followed by [[FiniteFeatureCols]], selected
+    * from [[Features.computeAllFeatures]]. Column pruning drops the EWMA
+    * passes the selection does not reference, so the plan is the fused
+    * pipeline's lag, running-sum and lag-of-sum windows only. */
   def finiteFeatures(df: DataFrame): DataFrame =
-    Temporal.withTemporal(
-      Technical.withBollinger(
-        Volatility.withVolatility(
-          Momentum.withMomentum(df))))
+    Features.computeAllFeatures(df)
+      .select((df.columns.toSeq ++ FiniteFeatureCols).map(col): _*)
 
   /** Compute finite-window features for `newBars` only, reading just the
     * per-symbol lookback tail of `history`. Contract: per symbol, every
@@ -79,13 +77,12 @@ object Incremental {
     * same assumption the reference's cache update makes). Symbols with
     * history shorter than the lookback keep ALL their history, so the
     * min_samples null gates match the full recompute exactly. */
-  def backfillFinite(history: DataFrame, newBars: DataFrame,
-      lookback: Int = FiniteLookback): DataFrame = {
+  def backfillFinite(history: DataFrame, newBars: DataFrame): DataFrame = {
     val w = Window.partitionBy(Frames.SymbolCol)
       .orderBy(col(Frames.TimeCol).desc, col(Frames.TieCol).desc)
     val tail = history
       .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= lookback)
+      .filter(col("_rn") <= FiniteLookback)
       .drop("_rn")
     val ctx = tail.withColumn("_is_new", lit(false))
       .unionByName(newBars.withColumn("_is_new", lit(true)))
@@ -93,8 +90,7 @@ object Incremental {
   }
 
   /** The EWMA-family feature columns [[backfillEwma]] emits. */
-  val EwmaFeatureCols: Seq[String] =
-    Seq("rsi", "macd", "macd_signal", "macd_histogram")
+  val EwmaFeatureCols: Seq[String] = Features.RsiCols ++ Features.MacdCols
 
   /** One-row-per-symbol terminal EWMA state after `history` — the carry a
     * daily append job persists so [[backfillEwma]] never rereads the
@@ -103,39 +99,16 @@ object Incremental {
     * closes are non-null and macd is defined from the first row),
     * avg_gain/avg_loss (adjust=false terminals; null until the first
     * delta), ema_fast/ema_slow/ema_sig (adjust=true terminals). */
-  def ewmaState(history: DataFrame,
-      rsiPeriod: Int = Params.RsiPeriod,
-      macdFast: Int = Params.MacdFast,
-      macdSlow: Int = Params.MacdSlow,
-      macdSignal: Int = Params.MacdSignal): DataFrame = {
-    import graft.expr.Ewma.ewmaSpanOver
-    val w = Frames.bySymbol
-    val part = Seq(col(Frames.SymbolCol))
-    val ord = Seq(col(Frames.TimeCol), col(Frames.TieCol))
-    def ewm(c: org.apache.spark.sql.Column, span: Double, adjust: Boolean) =
-      ewmaSpanOver(c, span, adjust, part, ord)
-    val close = col("close")
-    val delta = close - lag(close, 1).over(w)
-    val s1 = history.select(
-      col(Frames.SymbolCol), col(Frames.TimeCol), col(Frames.TieCol), close,
-      ((delta > 0).cast("double") * delta).as("_gain"),
-      ((delta < 0).cast("double") * (-delta)).as("_loss"))
-    val s2 = s1.select(col("*"),
-      ewm(col("_gain"), rsiPeriod, adjust = false).as("avg_gain"),
-      ewm(col("_loss"), rsiPeriod, adjust = false).as("avg_loss"),
-      ewm(close, macdFast, adjust = true).as("_ema_f"),
-      ewm(close, macdSlow, adjust = true).as("_ema_s"),
-      row_number().over(w).cast("long").as("n"))
-    val s3 = s2.select(col("*"),
-      ewm(col("_ema_f") - col("_ema_s"), macdSignal, adjust = true)
-        .as("ema_sig"))
+  def ewmaState(history: DataFrame): DataFrame = {
     val wDesc = Window.partitionBy(Frames.SymbolCol)
       .orderBy(col(Frames.TimeCol).desc, col(Frames.TieCol).desc)
-    s3.withColumn("_rnd", row_number().over(wDesc)).filter(col("_rnd") === 1)
-      .select(col(Frames.SymbolCol), close.as("last_close"), col("n"),
-        col("avg_gain"), col("avg_loss"),
+    Features.withHelpers(history)
+      .select(col(Frames.SymbolCol), col("close").as("last_close"),
+        row_number().over(Frames.bySymbol).cast("long").as("n"),
+        col("_avg_gain").as("avg_gain"), col("_avg_loss").as("avg_loss"),
         col("_ema_f").as("ema_fast"), col("_ema_s").as("ema_slow"),
-        col("ema_sig"))
+        col("macd_signal").as("ema_sig"), row_number().over(wDesc).as("_rnd"))
+      .filter(col("_rnd") === 1).drop("_rnd")
   }
 
   /** RSI/MACD family for `newBars` only, continuing the recurrences from
@@ -145,11 +118,7 @@ object Incremental {
     * recompute that begins at their first new bar). rsi is bit-equal to
     * the full recompute; the macd family is fp-equal (see the object
     * scaladoc). State is one row per symbol — broadcast. */
-  def backfillEwma(state: DataFrame, newBars: DataFrame,
-      rsiPeriod: Int = Params.RsiPeriod,
-      macdFast: Int = Params.MacdFast,
-      macdSlow: Int = Params.MacdSlow,
-      macdSignal: Int = Params.MacdSignal): DataFrame = {
+  def backfillEwma(state: DataFrame, newBars: DataFrame): DataFrame = {
     import graft.expr.Ewma.ewmaSpanOver
     val outCols = newBars.columns.toSeq
     val w = Frames.bySymbol
@@ -179,10 +148,10 @@ object Incremental {
         col("_al").as("_loss"), lit(0L).as("_seq"))
     val ctx = newRows.unionByName(synth, allowMissingColumns = true)
     val s2 = ctx.select(col("*"),
-      ewmSeq(col("_gain"), rsiPeriod, adjust = false).as("_avg_gain"),
-      ewmSeq(col("_loss"), rsiPeriod, adjust = false).as("_avg_loss"),
-      ewmSeq(col("close"), macdFast, adjust = true).as("_pf"),
-      ewmSeq(col("close"), macdSlow, adjust = true).as("_ps"))
+      ewmSeq(col("_gain"), Params.RsiPeriod, adjust = false).as("_avg_gain"),
+      ewmSeq(col("_loss"), Params.RsiPeriod, adjust = false).as("_avg_loss"),
+      ewmSeq(col("close"), Params.MacdFast, adjust = true).as("_pf"),
+      ewmSeq(col("close"), Params.MacdSlow, adjust = true).as("_ps"))
       .filter(col("_seq") > 0)
     // adjust=true continuation: y_{T+k} = ((1-α)^k·y_T·den_T + y'_k·den'_k)
     // / ((1-α)^k·den_T + den'_k), den m-term = (1-(1-α)^m)/α — exact factor
@@ -201,13 +170,13 @@ object Incremental {
           (decayK * denT + denP))
     }
     val s3 = s2.select(col("*"),
-      (contAdj(col("_pf"), col("_ef"), macdFast) -
-        contAdj(col("_ps"), col("_es"), macdSlow)).as("macd"))
+      (contAdj(col("_pf"), col("_ef"), Params.MacdFast) -
+        contAdj(col("_ps"), col("_es"), Params.MacdSlow)).as("macd"))
     // second pass: signal EWMA over the (continued) macd series, then its
     // own continuation against the history's terminal signal state
     val rs = col("_avg_gain") / (col("_avg_loss") + 1e-10)
-    val sig = contAdj(ewmSeq(col("macd"), macdSignal, adjust = true),
-      col("_eg"), macdSignal)
+    val sig = contAdj(ewmSeq(col("macd"), Params.MacdSignal, adjust = true),
+      col("_eg"), Params.MacdSignal)
     s3.select(col("*"),
         (lit(100) - lit(100) / (lit(1) + rs)).as("rsi"),
         sig.as("macd_signal"),

@@ -1546,7 +1546,7 @@ object Market {
     *
     * Legs reuse the house machinery exactly: RSI is the [[graft.expr.Ewma]]
     * adjust=false gain/loss pair with the identical 100−100/(1+rs) tree
-    * (Technical.withTechnical); the streak is [[withVolumeIndex]]-style
+    * ([[Features.computeAllFeatures]]'s rsi); the streak is [[withVolumeIndex]]-style
     * integer window arithmetic; the percent-rank leg counts prior-window
     * returns below today's via a frame-collected array (O(n·w), w=20 — the
     * window_mad cost class; a rank-vs-current-row predicate has no cum−lag
@@ -1778,11 +1778,13 @@ object Market {
     *   kel_mid  = SMA(tp, n)      band = SMA(high − low, n)
     *   squeeze_on = bb_upper < kel_mid + band AND bb_lower > kel_mid − band
     *
+    * The bb_* columns are selected from [[Features.computeAllFeatures]].
     * The flag compares the UNROUNDED doubles, identically re-derived in
     * the oracle. One more window pass over the shared per-symbol
     * exchange on top of Bollinger's. */
   def withSqueeze(df: DataFrame, n: Int = graft.Params.BbPeriod): DataFrame = {
-    val withBb = Technical.withBollinger(df)
+    val withBb = Features.computeAllFeatures(df)
+      .select((df.columns.toSeq ++ Features.BollingerCols).map(col): _*)
     val tp = (col("high") + col("low") + col("close")) / 3.0
     val rng = col("high") - col("low")
     val s1 = withBb.select(col("*"), tp.as("_tp"), rng.as("_rg"))

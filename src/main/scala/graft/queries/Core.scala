@@ -242,18 +242,19 @@ object Core {
   }
 
   /** W2/W7/W13/W14: per-period momentum block. */
-  def featMomentum(s: SparkSession, dir: String): DataFrame = {
-    val out = Params.MomentumPeriods.flatMap(p => Seq(
-      s"return_$p", s"momentum_$p", s"roc_$p", s"sma_$p", s"distance_sma_$p"))
-    keyed(Momentum.withMomentum(bars(s, dir)), out, out.toSet)
-  }
+  def featMomentum(s: SparkSession, dir: String): DataFrame =
+    family(s, dir, Features.MomentumCols)
 
   /** W4/W8/W9/W15-W17: returns + volatility block. */
-  def featVolatility(s: SparkSession, dir: String): DataFrame = {
-    val out = "returns" +: Params.VolatilityWindows.flatMap(n => Seq(
-      s"volatility_$n", s"realized_vol_$n", s"hl_range_$n"))
-    keyed(Volatility.withVolatility(bars(s, dir)), out, out.toSet)
-  }
+  def featVolatility(s: SparkSession, dir: String): DataFrame =
+    family(s, dir, Features.VolatilityCols)
+
+  /** One family's columns selected from the fused 49-feature pipeline
+    * (column pruning drops the windows the family does not read), r6-
+    * rounded. */
+  private def family(s: SparkSession, dir: String,
+      names: Seq[String]): DataFrame =
+    keyed(Features.computeAllFeatures(bars(s, dir)), names, names.toSet)
 
   /** VWAP block: cumulative + rolling volume-weighted average price and
     * close-to-VWAP distance (see [[graft.features.Market.withVwap]]). */
@@ -1009,33 +1010,25 @@ object Core {
   }
 
   /** F1-F3: calendar + cyclic encodings (narrow, no shuffle). */
-  def featTemporal(s: SparkSession, dir: String): DataFrame = {
-    val ints = Seq("hour", "minute", "day_of_week", "day", "month")
-    val dbls = Seq("hour_sin", "hour_cos", "day_of_week_sin", "day_of_week_cos",
-      "month_sin", "month_cos")
+  def featTemporal(s: SparkSession, dir: String): DataFrame =
     Temporal.withTemporal(bars(s, dir))
-      .select(col("event_id") +:
-        (ints.map(col) ++ dbls.map(n => r6(col(n)).as(n))): _*)
+      .select(col("event_id") +: (Features.CalendarCols.map(col) ++
+        Features.CyclicCols.map(n => r6(col(n)).as(n))): _*)
       .orderBy("event_id")
-  }
 
   /** W7/W8/W12: Bollinger bands. */
   def featBollinger(s: SparkSession, dir: String): DataFrame =
-    keyed(Technical.withTechnical(bars(s, dir)),
-      Seq("bb_middle", "bb_upper", "bb_lower", "bb_width"),
-      Set("bb_middle", "bb_upper", "bb_lower", "bb_width"))
+    family(s, dir, Features.BollingerCols)
 
   /** W1/W5/W10: RSI (custom Ewma adjust=false). Oracle: recursive-CTE
     * recurrence replay (OracleSql.featRsi) + EwmaSpec golden vectors. */
   def featRsi(s: SparkSession, dir: String): DataFrame =
-    keyed(Technical.withTechnical(bars(s, dir)), Seq("rsi"), Set("rsi"))
+    family(s, dir, Features.RsiCols)
 
   /** W6/W11: MACD (custom Ewma adjust=true, two window passes). Oracle:
     * recursive-CTE recurrence replay (OracleSql.featMacd). */
   def featMacd(s: SparkSession, dir: String): DataFrame =
-    keyed(Technical.withTechnical(bars(s, dir)),
-      Seq("macd", "macd_signal", "macd_histogram"),
-      Set("macd", "macd_signal", "macd_histogram"))
+    family(s, dir, Features.MacdCols)
 
   /** W3/W18: forward-return classification target. */
   def targetsClassification(s: SparkSession, dir: String): DataFrame =
@@ -1427,27 +1420,18 @@ object Core {
     * (src/ml/training.py:39-41). The EWMA family is oracle-checked via
     * DuckDB recursive CTEs replaying the exact recurrence. */
   val MlMatrixFeatures: Seq[String] =
-    Seq("rsi", "macd", "macd_signal", "macd_histogram") ++
-    Params.MomentumPeriods.flatMap(p => Seq(
-      s"return_$p", s"momentum_$p", s"roc_$p", s"sma_$p", s"distance_sma_$p")) ++
-    ("returns" +: Params.VolatilityWindows.flatMap(n => Seq(
-      s"volatility_$n", s"realized_vol_$n", s"hl_range_$n"))) ++
-    Seq("bb_middle", "bb_upper", "bb_lower", "bb_width") ++
-    Seq("hour", "minute", "day_of_week", "day", "month",
-      "hour_sin", "hour_cos", "day_of_week_sin", "day_of_week_cos",
-      "month_sin", "month_cos")
+    Features.RsiCols ++ Features.MacdCols ++ Features.MomentumCols ++
+      Features.VolatilityCols ++ Features.BollingerCols ++ Features.TemporalCols
 
   /** M1/P4/P7: ML feature matrix — select features + target, drop any-null
     * rows (reference src/ml/training.py:39-58). */
   def mlMatrix(s: SparkSession, dir: String): DataFrame = {
-    // Fused 4-window pipeline — identical expression trees (and oracle) as
-    // the per-family composition, half the window passes.
     val feats = Features.computeAllFeatures(bars(s, dir))
     val withTarget = Targets.withTarget(feats, targetType = "classification")
     val selected = withTarget.select(
       col("event_id") +: (MlMatrixFeatures.map(col) :+ col("target")): _*)
     val dropped = selected.na.drop("any", MlMatrixFeatures)
-    val ints = Set("hour", "minute", "day_of_week", "day", "month")
+    val ints = Features.CalendarCols.toSet
     dropped.select(
       col("event_id") +:
       (MlMatrixFeatures.map(n => if (ints(n)) col(n) else r6(col(n)).as(n)) :+

@@ -299,7 +299,7 @@ object Streams {
     gSeen: Boolean, avgGain: Double, lSeen: Boolean, avgLoss: Double)
 
   /** Streaming RSI: the batch pipeline's diff → gain/loss →
-    * EWMA(adjust=false) → rs → rsi recurrence (graft.features.Technical,
+    * EWMA(adjust=false) → rs → rsi recurrence (graft.features.Features,
     * reference src/features/engineering.py:36-47) carried as per-symbol
     * state — bit-identical arithmetic to the Catalyst Ewma window
     * expression, so streaming and batch agree exactly, row for row.

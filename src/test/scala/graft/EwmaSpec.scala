@@ -1,7 +1,7 @@
 package graft
 
 import graft.expr.Ewma
-import graft.features.Technical
+import graft.features.Features
 import org.apache.spark.sql.functions._
 
 /** Golden-vector checks for the custom Ewma window expression and the
@@ -15,7 +15,7 @@ class EwmaSpec extends SparkSpec {
   private val close = Seq(100.0, 101.5, 99.8, 102.3, 103.1, 102.0, 104.5, 104.5,
     103.2, 105.0, 106.1, 104.8, 107.2, 108.0, 106.5, 109.3, 110.0, 108.7, 111.2, 112.5)
 
-  private lazy val tech = Technical.withTechnical(barsOf(close))
+  private lazy val tech = Features.computeAllFeatures(barsOf(close))
 
   test("ewma adjust=false matches pandas (RSI avg-gain, leading null skipped)") {
     val w = graft.features.Frames.bySymbol
@@ -130,7 +130,7 @@ class EwmaSpec extends SparkSpec {
 
   test("ewma partitions independently per symbol") {
     val two = barsOf(close, "A").unionByName(barsOf(close.map(_ * 2), "B"))
-    val t = Technical.withTechnical(two)
+    val t = Features.computeAllFeatures(two)
     val a = column(t.filter(col("symbol") === "A"), "macd")
     val b = column(t.filter(col("symbol") === "B"), "macd")
     a.zip(b).foreach { case (x, y) =>

@@ -22,7 +22,7 @@ class FeatureSpec extends SparkSpec {
   private def whenever(cond: Boolean)(body: => Unit): Unit = if (cond) body
 
   test("rolling features are null exactly until the window fills") {
-    val df = Momentum.withMomentum(barsOf((1 to 60).map(_.toDouble)))
+    val df = Features.computeAllFeatures(barsOf((1 to 60).map(_.toDouble)))
     for (p <- Params.MomentumPeriods) {
       val sma = column(df, s"sma_$p")
       assert(sma.take(p - 1).forall(_.isEmpty), s"sma_$p should be null before row $p")
@@ -31,7 +31,7 @@ class FeatureSpec extends SparkSpec {
       val ret = column(df, s"return_$p")
       assert(ret.take(p).forall(_.isEmpty) && ret.drop(p).forall(_.isDefined))
     }
-    val v = Volatility.withVolatility(barsOf((1 to 70).map(_.toDouble)))
+    val v = Features.computeAllFeatures(barsOf((1 to 70).map(_.toDouble)))
     for (w <- Params.VolatilityWindows) {
       val vol = column(v, s"volatility_$w")
       // returns has a leading null → window fills one row later
@@ -42,7 +42,7 @@ class FeatureSpec extends SparkSpec {
   test("bollinger band ordering: lower <= middle <= upper, rsi in [0,100]") {
     forAll(samples(5, 70)) { cs =>
       whenever(cs.length >= 21) {
-        val t = Technical.withTechnical(barsOf(cs))
+        val t = Features.computeAllFeatures(barsOf(cs))
         val rows = t.select("bb_lower", "bb_middle", "bb_upper", "rsi")
           .collect()
         rows.foreach { r =>
@@ -62,7 +62,7 @@ class FeatureSpec extends SparkSpec {
   test("return_p sign agrees with momentum_p sign") {
     forAll(samples(5, 70)) { cs =>
       whenever(cs.length >= 51) {
-        val m = Momentum.withMomentum(barsOf(cs))
+        val m = Features.computeAllFeatures(barsOf(cs))
         for (p <- Params.MomentumPeriods) {
           column(m, s"return_$p").zip(column(m, s"momentum_$p")).foreach {
             case (Some(r), Some(mo)) => assert(math.signum(r) == math.signum(mo) || mo == 0.0)

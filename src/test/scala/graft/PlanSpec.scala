@@ -18,13 +18,37 @@ class PlanSpec extends SparkSpec {
     plan(df).linesIterator.count(_.contains(op))
 
   test("fused 49-feature pipeline: <=5 window passes, one hash exchange") {
-    val feats = graft.features.Features.computeAllFeatures(
-      graft.source.Bars.bars(spark, dir))
-    val windows = plan(feats).linesIterator.count(_.matches(".*\\bWindow \\[.*"))
-    assert(windows > 0 && windows <= 5,
-      s"feature pipeline regressed to $windows window passes")
-    val hashEx = countOp(feats, "Exchange hashpartitioning")
-    assert(hashEx == 1, s"feature pipeline has $hashEx hash exchanges (want 1)")
+    import graft.features.{Features, Incremental}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    val b = graft.source.Bars.bars(spark, dir)
+    val all = Features.computeAllFeatures(b)
+    def family(names: Seq[String]) =
+      all.select(("symbol" +: "event_id" +: names).map(col): _*)
+    def windows(df: DataFrame) =
+      plan(df).linesIterator.count(_.matches(".*\\bWindow \\[.*"))
+    val source = windows(b) // the bars' own open = lag(close) pass
+    // Every family is a column selection of the fused pipeline; column
+    // pruning must drop the windows a selection does not read, so a
+    // finite-window selection plans no EWMA recurrence.
+    for ((name, df, maxWindows, hasEwma) <- Seq(
+        ("computeAllFeatures", all, 4, true),
+        ("finiteFeatures", Incremental.finiteFeatures(b), 3, false),
+        ("rsi", family(Features.RsiCols), 3, true),
+        ("macd", family(Features.MacdCols), 3, true),
+        ("bollinger", family(Features.BollingerCols), 3, false),
+        ("momentum", family(Features.MomentumCols), 3, false),
+        ("volatility", family(Features.VolatilityCols), 3, false))) {
+      val passes = windows(df) - source
+      assert(passes > 0 && passes <= maxWindows,
+        s"$name regressed to $passes window passes over the bars (want <= $maxWindows)")
+      val hashEx = countOp(df, "Exchange hashpartitioning")
+      assert(hashEx == 1, s"$name has $hashEx hash exchanges (want 1)")
+      val ewmas = df.queryExecution.optimizedPlan
+        .collect { case w: WindowNode => w.windowExpressions }.flatten
+        .count(_.find(_.isInstanceOf[graft.expr.Ewma]).isDefined)
+      assert((ewmas > 0) == hasEwma,
+        s"$name plans $ewmas EWMA window expressions (want ${if (hasEwma) "some" else "none"})")
+    }
   }
 
   test("star join broadcasts the dimension side") {

@@ -187,7 +187,7 @@ class PropSpec extends SparkSpec {
   }
 
   test("property: incremental EWMA backfill == full recompute on the new rows (rsi bit-exact)") {
-    import graft.features.{Incremental, Technical}
+    import graft.features.{Features, Incremental}
     for (trial <- 1 to 3) {
       // A long, B short (including 1-row history: avg_gain still null in
       // state), C entirely new (no state row)
@@ -204,7 +204,7 @@ class PropSpec extends SparkSpec {
         (col("symbol") === "C")
       val state = Incremental.ewmaState(full.filter(!isNew))
       val got = Incremental.backfillEwma(state, full.filter(isNew))
-      val want = Technical.withTechnical(full).filter(isNew)
+      val want = Features.computeAllFeatures(full).filter(isNew)
       val cols = Seq("symbol", "event_id") ++ Incremental.EwmaFeatureCols
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select(cols.map(col): _*).orderBy("symbol", "event_id")

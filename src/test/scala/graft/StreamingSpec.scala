@@ -1,7 +1,11 @@
 package graft
 
 import graft.analytics.{Relational, TimeWindows}
+import graft.features.{Features, Market}
+import graft.source.Bars
 import graft.streaming.Streams
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -42,67 +46,77 @@ class StreamingSpec extends SparkSpec {
     splitDir
   }
 
-  /** `got` (event_id, rsi) equals the batch RSI pipeline's column row for
-    * row, down to the raw bits of every double. */
-  private def assertRsiBits(got: org.apache.spark.sql.DataFrame): Unit = {
-    val want = graft.features.Technical.withTechnical(
-        graft.source.Bars.bars(spark, dir))
-      .select(col("event_id"), col("rsi"))
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("event_id"), col("g.rsi").as("g_rsi"), col("w.rsi").as("w_rsi"))
+  private val pb = Seq(col("symbol"))
+  private val ob = Seq(col("datetime"), col("event_id"))
+
+  /** `got` and the unrounded batch `want` hold the same event_ids, and on
+    * each (got, want) column pair agree row for row: same null-ness, the
+    * same raw bits for doubles, the same value otherwise. */
+  private def assertSameBits(got: DataFrame, want: DataFrame,
+      pairs: (String, String)*): Unit = {
+    val n = want.count()
+    assert(got.count() == n, s"row sets differ: ${got.count()} vs $n")
+    val joined = got.as("g").join(want.as("w"), Seq("event_id"))
+      .select(col("event_id") +: pairs.flatMap { case (g, w) =>
+        Seq(col(s"g.$g"), col(s"w.$w")) }: _*)
       .collect()
-    assert(joined.length == 1000)
+    assert(joined.length == n, s"event_id sets differ: ${joined.length} of $n joined")
+    def same(a: Any, b: Any) = (a, b) match {
+      case (x: java.lang.Double, y: java.lang.Double) =>
+        java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+      case _ => a == b
+    }
     joined.foreach { r =>
-      val (g, w) = (Option(r.get(1)).map(_.asInstanceOf[Double]),
-        Option(r.get(2)).map(_.asInstanceOf[Double]))
-      assert(g.isDefined == w.isDefined, s"null mismatch at ${r.get(0)}: $g vs $w")
-      g.zip(w).foreach { case (a, b) =>
-        assert(java.lang.Double.doubleToRawLongBits(a) ==
-          java.lang.Double.doubleToRawLongBits(b), s"rsi mismatch at ${r.get(0)}: $a vs $b")
+      pairs.indices.foreach { i =>
+        assert(same(r.get(1 + 2 * i), r.get(2 + 2 * i)),
+          s"${pairs(i)._1} mismatch at ${r.get(0)}: ${r.get(1 + 2 * i)} vs ${r.get(2 + 2 * i)}")
       }
     }
   }
 
-  /** `got` (a [[Streams.streamingBurst]] output) equals the batch
-    * events_burst on its non-null rows. */
-  private def assertBurstMatchesBatch(got: org.apache.spark.sql.DataFrame): Unit = {
-    // batch side r6-rounds at the output boundary; first-event rows are
-    // NULL there and absent from the stream — compare the non-null set
-    val want = graft.queries.Analytics.eventsBurst(spark, dir)
-      .filter(col("burst").isNotNull)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.cost0"), col("w.cost0"),
-        col("g.cost1"), col("w.cost1"),
-        col("g.burst"), col("w.burst"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"costs diverge: $r")
-      assert((r.getBoolean(4)) == (r.getInt(5) == 1), s"flags diverge: $r")
-    }
+  /** `got` (event_id, rsi) equals the batch RSI column row for row, down
+    * to the raw bits of every double. */
+  private def assertRsiBits(got: DataFrame): Unit = {
+    assert(got.count() == 1000)
+    assertSameBits(got, Features.computeAllFeatures(Bars.bars(spark, dir))
+      .select("event_id", "rsi"), "rsi" -> "rsi")
   }
 
-  /** `got` (a [[Streams.streamingHolt]] output) equals the batch
-    * window_holt row for row. */
-  private def assertHoltMatchesBatch(got: org.apache.spark.sql.DataFrame): Unit = {
-    val want = graft.queries.Analytics.windowHolt(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    // batch output is r6-rounded at the query boundary; compare at that
-    // granularity (same contract as the CUSUM parity test)
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.level"), col("w.holt_level"),
-        col("g.trend"), col("w.holt_trend"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7, s"holt mismatch: $r")
-    }
+  /** `got` (a [[Streams.streamingBurst]] output) equals the unrounded
+    * batch [[graft.expr.Burst2]] recursion (events_burst's) on its
+    * non-null rows: each user's first event is NULL there and absent
+    * from the stream. */
+  private def assertBurstMatchesBatch(got: DataFrame): Unit = {
+    val ev = Bars.readEvents(spark, dir)
+      .select(col("user_id"), col("event_id"), col("ts"),
+        unix_micros(col("ts")).as("_tus"))
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val b = graft.expr.Burst2.burst2Over(col("_x"), col("lam"),
+      Params.BurstRateRatio, Params.BurstGamma,
+      Seq(col("user_id")), Seq(col("ts"), col("event_id")))
+    val want = ev.join(Streams.burstRates(ev), "user_id")
+      .withColumn("_x", (col("_tus") - lag(col("_tus"), 1).over(w))
+        .cast("double"))
+      .select(col("event_id"), b.as("_b"))
+      .filter(col("_b.cost0").isNotNull)
+      .select(col("event_id"), col("_b.cost0").as("cost0"),
+        col("_b.cost1").as("cost1"),
+        (col("_b.cost1") < col("_b.cost0")).as("burst"))
+    assertSameBits(got, want, "cost0" -> "cost0", "cost1" -> "cost1",
+      "burst" -> "burst")
   }
+
+  /** `got` (a [[Streams.streamingHolt]] output) equals the unrounded
+    * batch [[graft.expr.Holt]] recursion (window_holt's) row for row. */
+  private def assertHoltMatchesBatch(got: DataFrame): Unit = {
+    val want = Bars.bars(spark, dir)
+      .select(col("event_id"), graft.expr.Holt.holtOver(col("close"),
+        Params.HoltAlpha, Params.HoltBeta, pb, ob).as("_h"))
+      .select(col("event_id"), col("_h.level").as("level"),
+        col("_h.trend").as("trend"))
+    assertSameBits(got, want, "level" -> "level", "trend" -> "trend")
+  }
+
 
   test("streaming tumbling window counts equal the batch window aggregation") {
     val stream = Streams.tumblingCounts(Streams.readEventStream(spark, dir))
@@ -216,23 +230,21 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("stream_cusum")
-    // batch side UNROUNDED (the query's r6 is an output-boundary concern)
-    val want = graft.queries.Analytics.windowCusum(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.cusum_up"), round(col("w.cusum_up"), 6),
-        col("g.cusum_down"), round(col("w.cusum_down"), 6),
-        col("g.alarm_up"), col("w.alarm_up"),
-        col("g.alarm_down"), col("w.alarm_down"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-        math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7)
-      assert(r.getBoolean(4) == r.getBoolean(5) &&
-        r.getBoolean(6) == r.getBoolean(7))
-    }
+    // batch side UNROUNDED: window_cusum's expressions without its r6
+    val prev = lag(col("close"), 1).over(graft.features.Frames.bySymbol)
+    val want = Bars.bars(spark, dir)
+      .select(col("symbol"), col("event_id"), col("datetime"),
+        (col("close") - prev).as("ret"))
+      .filter(col("ret").isNotNull)
+      .select(col("event_id"),
+        graft.expr.Cusum.cusumOver(col("ret"), Params.CusumDrift, pb, ob)
+          .as("su"),
+        graft.expr.Cusum.cusumOver(-col("ret"), Params.CusumDrift, pb, ob)
+          .as("sd"))
+      .select(col("*"), (col("su") > Params.CusumThreshold).as("au"),
+        (col("sd") > Params.CusumThreshold).as("ad"))
+    assertSameBits(got, want, "cusum_up" -> "su", "cusum_down" -> "sd",
+      "alarm_up" -> "au", "alarm_down" -> "ad")
   }
 
   test("streaming burst detection equals the batch events_burst bit-for-bit") {
@@ -275,23 +287,9 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("stream_st")
-    // batch output is r6-rounded at the query boundary; compare at that
-    // granularity (same contract as the CUSUM parity test)
-    val want = graft.queries.Core.featSupertrend(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.supertrend"), col("w.supertrend"),
-        col("g.st_trend"), col("w.st_trend"))
-      .collect()
-    joined.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1), s"null gate mismatch: $r")
-      if (!r.isNullAt(0)) {
-        assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7,
-          s"supertrend mismatch: $r")
-        assert(r.getInt(2) == r.getInt(3), s"regime mismatch: $r")
-      }
-    }
+    // batch side UNROUNDED: feat_supertrend's columns without its r6
+    assertSameBits(got, Market.withSupertrend(Bars.bars(spark, dir)),
+      "supertrend" -> "supertrend", "st_trend" -> "st_trend")
   }
 
   test("streaming PSAR equals the batch feat_psar row for row") {
@@ -301,18 +299,8 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("stream_psar")
-    val want = graft.queries.Core.featPsar(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.psar"), col("w.psar"),
-        col("g.psar_trend"), col("w.psar_trend"))
-      .collect()
-    joined.foreach { r =>
-      assert(!r.anyNull, s"row set mismatch: $r")
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7, s"psar: $r")
-      assert(r.getInt(2) == r.getInt(3), s"regime: $r")
-    }
+    assertSameBits(got, Market.withPsar(Bars.bars(spark, dir)),
+      "psar" -> "psar", "psar_trend" -> "psar_trend")
   }
 
   test("streaming RSI and burst state carries across micro-batches (time-split files)") {
@@ -849,21 +837,8 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("stream_garch")
-    val want = graft.queries.Core.featGarch(spark, dir)
-    assert(got.count() == want.count(),
-      s"row sets differ: ${got.count()} vs ${want.count()}")
-    val joined = got.as("g").join(want.as("w"), Seq("event_id"), "full_outer")
-      .select(col("g.garch_var"), col("w.garch_var"),
-        col("g.garch_vol"), col("w.garch_vol"))
-      .collect()
-    joined.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1), s"null gate mismatch: $r")
-      if (!r.isNullAt(0)) {
-        assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 5e-7 &&
-          math.abs(r.getDouble(2) - r.getDouble(3)) < 5e-7,
-          s"garch mismatch: $r")
-      }
-    }
+    assertSameBits(got, Market.withGarch(Bars.bars(spark, dir)),
+      "garch_var" -> "garch_var", "garch_vol" -> "garch_vol")
   }
 
   test("e2e pipeline: ingest → watermark dedup → RSI (transformWithState) → upsert sink equals batch, across a checkpoint restart") {
